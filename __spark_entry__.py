@@ -297,20 +297,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # label + survivor flag + n_chars — absorbs the former
         # dedup_canonical_corpus entry, whose survivor selection is still
         # exercised THROUGH canonical_corpus (the flag comes from its
-        # output, not a re-derivation).  method="labelprop" keeps the
-        # min-label-propagation CC strategy under the driver's oracle (the
-        # recursive-CTE oracle is engine-independent, so it checks either
-        # strategy); the star rounds stay driver-covered via
-        # dedup_cluster_stats (method="star"), the fold via the
-        # auto-default entries (multimodal_dedup_clusters*).
+        # output, not a re-derivation).  Clustering is the fold CC; the
+        # recursive-CTE oracle is engine-independent (component-min labels).
         from fuzzymatch_spark.operators.cluster import canonical_corpus
 
         sig = _sig(spark, sf).persist()
         edges = ngram_jaccard_pairs(sig, threshold_pct=JACCARD_PCT)
         ids = sig.select(F.col("id").alias("doc_id"))
-        clusters = cluster_assignments(
-            edges, ids, id_col="doc_id", method="labelprop"
-        )
+        clusters = cluster_assignments(edges, ids, id_col="doc_id")
         docs = _docs(spark, sf).select(
             "doc_id", F.length("text").cast("long").alias("n_chars")
         )
@@ -340,11 +334,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sig = _sig(spark, sf).persist()
         edges = ngram_jaccard_pairs(sig, threshold_pct=JACCARD_PCT)
         ids = sig.select(F.col("id").alias("doc_id"))
-        # method="star" keeps the large/small-star rounds driver-covered
-        # now that the auto default routes to the fold (the other two
-        # strategies are covered by dedup_clusters [labelprop] and the
-        # auto entries [fold]); all strategies are label-identical
-        clusters = cluster_assignments(edges, ids, id_col="doc_id", method="star")
+        clusters = cluster_assignments(edges, ids, id_col="doc_id")
         return cluster_size_histogram(clusters)
 
     q["dedup_cluster_stats"] = dedup_cluster_stats

@@ -8,7 +8,7 @@ Spark DataFrame dataflows:
 * reference prefilter cascade  -> column predicates + LSH candidate generation
 * reference scoring kernels    -> vectorized numpy kernels inside pandas UDFs
 * reference ranked match lists -> window top-k / TakeOrderedAndProject
-* (engine-only) clustering     -> large-star/small-star connected components
+* (engine-only) clustering     -> spanning-forest fold connected components
 
 See SURVEY.md for the full operator mapping.
 """

@@ -17,7 +17,6 @@ from fuzzymatch_spark.operators.cluster import (
     canonical_corpus,
     cluster_assignments,
     cluster_size_histogram,
-    connected_components,
 )
 from fuzzymatch_spark.operators.ann import (
     cosine_topk,
@@ -69,7 +68,6 @@ __all__ = [
     "phash_band_edges",
     "candidate_edges",
     "verify_edges",
-    "connected_components",
     "cluster_assignments",
     "cluster_size_histogram",
     "canonical_corpus",

@@ -1,18 +1,17 @@
-"""Connected components via alternating large-star / small-star.
+"""Connected components through a two-level spanning-forest fold.
 
-Kiveris et al., "Connected Components in MapReduce and Beyond" (PAPERS.md
-corpus lineage).  No reference counterpart — the reference returns flat
-ranked lists; clustering is required by the north rule.
+No reference counterpart — the reference returns flat ranked lists;
+clustering is required by the north rule.  Labels are deterministic:
+cluster_id = min(node id) in the component, which is unique, so any exact
+engine yields the same labels.
 
-Each round is two shuffles (groupBy-min + join); per-round
-``localCheckpoint`` cuts the lineage so the iterative plan doesn't blow up
-Catalyst.  Convergence is detected with an order-insensitive fingerprint
-(sum of edge hashes + count), checked per iteration.  Labels are
-deterministic: cluster_id = min(node id) in the component.
-
-At 10^12-row scale the per-iteration frames should be written to a real
-checkpoint table instead of localCheckpoint (see plans/pipeline.py, which
-does exactly that with parquet stage checkpoints + completion markers).
+``fold_components`` is the one CC engine: a per-partition vectorized
+contraction to a spanning forest, then a single-task fold of that forest —
+two jobs and no convergence rounds.  Only when the forest outgrows one
+task does ``label_prop_components`` (min-label propagation over the O(V)
+forest) finish it.  Large-star/small-star rounds (Kiveris et al.) and a
+batch-local union-find pre-pass were measured slower at every probed scale
+and removed; the A/B history is in BENCH.md.
 """
 
 from __future__ import annotations
@@ -20,225 +19,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    bid = edges.select("a", "b").unionAll(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    mins = bid.groupBy("a").agg(F.min("b").alias("m"))
-    mins = mins.withColumn("m", F.least(F.col("m"), F.col("a")))
-    return (
-        bid.join(mins, on="a")
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    oriented = edges.select(
-        F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    mins = oriented.groupBy("a").agg(F.min("b").alias("m"))
-    linked = (
-        oriented.join(mins, on="a")
-        .filter(F.col("b") != F.col("m"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-    )
-    centers = mins.select(F.col("a"), F.col("m").alias("b"))
-    return linked.unionAll(centers).distinct()
-
-
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        # decimal(38,0) accumulation: ANSI-safe against long overflow
-        F.coalesce(
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
-def _batch_contract(edges: DataFrame) -> DataFrame:
-    """Batch-local union-find contraction: each Arrow batch of edges is
-    collapsed to its spanning forest (node -> batch-root), bounding the
-    edge volume entering the first star round at ~|distinct nodes per
-    batch| instead of |E|.  Connectivity is preserved exactly (a
-    per-batch forest plus the cross-batch unions the star rounds do), so
-    the final min-id labels are identical with or without the pre-pass.
-
-    Adopt when FIRST-ROUND SHUFFLE VOLUME dominates (dense near-dup
-    corpora at cluster scale); at sf0.1 CC is round-latency-bound and the
-    pass is neutral (A/B in BENCH.md, r4/r5)."""
-    import pandas as pd
-
-    schema = edges.schema
-
-    def contract(batches):
-        for pdf in batches:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != x:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for a, b in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # deterministic orientation: larger root under smaller
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            out_a, out_b = [], []
-            for n in list(parent):
-                r = find(n)
-                if r != n:
-                    out_a.append(n)
-                    out_b.append(r)
-            yield pd.DataFrame(
-                {schema[0].name: out_a, schema[1].name: out_b}
-            )
-
-    return edges.mapInPandas(contract, schema)
-
-
-def connected_components(
-    edges_df: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-    max_iter: int = 50,
-    checkpoint_fn=None,
-    precontract: bool = False,
-) -> DataFrame:
-    """Returns (node, cluster_id) with cluster_id = min node id in component.
-
-    ``checkpoint_fn(df, iteration) -> df`` optionally replaces
-    localCheckpoint (e.g. writing a parquet stage checkpoint for resume).
-
-    ``precontract`` runs the batch-local union-find spanning-forest pass
-    before the star rounds (see ``_batch_contract``) — label-identical
-    output, worthwhile when first-round edge volume, not round count,
-    dominates.
-
-    Thread-safety note: once the edge set collapses, the remaining rounds
-    run under operator-scoped session conf (size-first AQE coalescing + a
-    small fanout, restored in ``finally``).  Session conf is process-global in
-    Spark, so OTHER queries submitted concurrently on the same
-    SparkSession during the O(log n) rounds would also see the reduced
-    fanout — run this operator serially with respect to other work on the
-    session (the staged pipeline does; see plans/pipeline.py).
-    """
-    edges = (
-        edges_df.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    if precontract:
-        edges = _batch_contract(edges)
-    # Two-regime conf strategy (A/B-measured at sf0.1, 948k edges):
-    # the FIRST round carries the full edge volume and wants the session's
-    # parallelism-first AQE coalescing + full shuffle fanout; the star
-    # rounds then shrink the edge set geometrically (948k -> ~3k after one
-    # round on a dense corpus), after which rounds are latency-bound and
-    # want SIZE-FIRST coalescing + a small fanout.  The switch is driven by
-    # the convergence fingerprint's edge count — no up-front count job, no
-    # re-execution of the caller's DAG, and the big round is never starved
-    # (the round-2 static size-first/fanout-10 scheme cost +25% here).
-    spark = edges_df.sparkSession
-    _pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    _sp_key = "spark.sql.shuffle.partitions"
-    _pf_prev = spark.conf.get(_pf_key, "true")
-    _sp_prev = spark.conf.get(_sp_key)
-    _small_threshold = 50_000
-    if checkpoint_fn is None:
-        # LAZY local checkpoint: lineage is cut, but materialization happens
-        # at the next action — which is the every-2nd-iteration fingerprint.
-        # Net: ONE job per two star rounds instead of three (two eager
-        # checkpoints + a fingerprint).  Pipelines that need durable
-        # per-iteration resume points pass an eager parquet checkpoint_fn
-        # instead (plans/pipeline.py).
-        def checkpoint_fn(df: DataFrame, _i: int) -> DataFrame:
-            return df.localCheckpoint(eager=False)
-
-    # Convergence is checked every 2nd iteration: each fingerprint is a
-    # full job + driver round-trip on top of the checkpoint materialization,
-    # and large-star/small-star converges in O(log n) rounds — one possible
-    # extra (cheap, already-converged) round costs less than a fingerprint
-    # job per round.  At most ceil(max_iter/2) driver actions for the check.
-    try:
-        prev_fp = None
-        small = False
-        for i in range(max_iter):
-            edges = _small_star(_large_star(edges))
-            edges = checkpoint_fn(edges, i)
-            if i % 2 == 1 or i == max_iter - 1:
-                fp = _fingerprint(edges)
-                if fp == prev_fp:
-                    break
-                prev_fp = fp
-                if not small and fp[0] < _small_threshold:
-                    small = True
-                    spark.conf.set(_pf_key, "false")
-                    spark.conf.set(_sp_key, "8")
-    finally:
-        spark.conf.set(_pf_key, _pf_prev)
-        spark.conf.set(_sp_key, _sp_prev)
-
-    # converged: every edge is (node, component_min); nodes that ARE the
-    # minimum appear only on the b side
-    labels = edges.select(F.col("a").alias("node"), F.col("b").alias("cluster_id"))
-    centers = edges.select(F.col("b").alias("node"), F.col("b").alias("cluster_id"))
-    return labels.unionAll(centers).groupBy("node").agg(
-        F.min("cluster_id").alias("cluster_id")
-    )
-
-
 def label_prop_components(
     edges_df: DataFrame,
     a_col: str = "a_id",
     b_col: str = "b_id",
     max_iter: int = 12,
-    copartition: bool = False,
 ) -> DataFrame:
-    """Min-label propagation CC — the LOW-DIAMETER fast path.
+    """Min-label propagation CC — the fold's finish for forests too large
+    for one task.
 
-    Star rounds (``connected_components``) reshuffle the full EDGE SET
-    every round; on a dedup graph (near-cliques, diameter ~2-8) that is
-    the whole cost.  Label propagation instead persists the
-    bidirectional edge table ONCE, then each iteration moves only
-    labels: join labels to edges, groupBy the destination with a
+    The bidirectional edge table is persisted ONCE; each iteration then
+    moves only labels: join labels to edges, groupBy the destination with a
     map-side-combined ``min`` — per-iteration exchange volume is
     O(distinct dst per map partition), not O(E).  Labels start as node
     ids and monotonically decrease to the component minimum, so
     convergence is an exact one-aggregate check (the decimal-summed
     label total stops decreasing — no join needed).
 
-    ``copartition`` pre-shuffles the edge table by source so every
-    iteration's join reuses that exchange — pay one O(E) shuffle to make
-    iterations exchange-free on the edge side.  Worth it ONLY where the
-    label table is too big for a broadcast join (very large V on a real
-    cluster); locally AQE broadcasts the labels and the upfront shuffle
-    is pure waste (A/B at sf1: 12.5 s vs 16.7 s, BENCH.md).  Pointer
-    jumping (label(v) <- label(label(v))) was also A/B'd: it cuts
-    iterations 8 -> 6 but the extra per-iteration join costs more than
-    the rounds it saves (19.0 s vs 12.6 s) — rejected, recorded.
+    Recorded negatives (BENCH.md): pre-shuffling the edge table by source
+    so every iteration reuses that exchange lost locally (16.7 s vs 12.5 s
+    at sf1), since AQE broadcasts the label table anyway; pointer jumping
+    (label(v) <- label(label(v))) cuts iterations 8 -> 6 but its extra
+    per-iteration join costs more than the rounds it saves (19.0 s vs
+    12.6 s).
 
     Propagation moves one hop per iteration, so diameter-D components
     need ~D iterations; if ``max_iter`` is hit, the remaining (rare,
-    high-diameter) structure is finished EXACTLY by handing the
-    label-contracted edge set to the star rounds and composing the
-    mappings — output is identical to ``connected_components`` for every
-    input, fallback or not (min label of a component is unique).
-
-    At cluster scale this is the bandwidth winner for dedup graphs: the
-    edge table crosses the network once; iterations ship label tables
-    (O(V)) instead of edge sets (O(E), with E >> V on near-clique dedup
-    output).  Returns (node, cluster_id), same contract as
-    ``connected_components``.
+    high-diameter) structure is finished EXACTLY by folding the
+    label-contracted edge set (``fold_components``) and composing the
+    mappings.  Not converging means some label moved, so the contracted
+    graph has strictly fewer nodes and the recursion ends.  Output is
+    (node, cluster_id), identical to the fold's for every input.
     """
     from pyspark import StorageLevel
 
@@ -248,10 +59,7 @@ def label_prop_components(
     )
     bid = edges.unionAll(
         edges.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    )
-    if copartition:
-        bid = bid.repartition("s")
-    bid = bid.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     labels = bid.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -286,33 +94,29 @@ def label_prop_components(
         prev_sum = cur
 
     if not converged:
-        # exact finish: contract edges through the current labels and let
-        # the star rounds close the remaining high-diameter structure
+        # exact finish: contract edges through the current labels and fold
+        # the remaining high-diameter structure
         la = labels.select(
             F.col("node").alias("s"), F.col("label").alias("la")
         )
         lb = labels.select(
             F.col("node").alias("d"), F.col("label").alias("lb")
         )
-        contracted = (
-            edges.join(la, "s").join(lb, "d")
-            .select(F.col("la").alias("a_id"), F.col("lb").alias("b_id"))
-            .filter(F.col("a_id") != F.col("b_id"))
-            .distinct()
+        contracted = edges.join(la, "s").join(lb, "d").select(
+            F.col("la").alias("a_id"), F.col("lb").alias("b_id")
         )
-        if contracted.limit(1).count() > 0:
-            super_labels = connected_components(contracted)
-            labels = (
-                labels.join(
-                    super_labels.withColumnRenamed("node", "label"),
-                    on="label",
-                    how="left",
-                )
-                .select(
-                    "node",
-                    F.coalesce("cluster_id", "label").alias("label"),
-                )
+        super_labels = fold_components(contracted)
+        labels = (
+            labels.join(
+                super_labels.withColumnRenamed("node", "label"),
+                on="label",
+                how="left",
             )
+            .select(
+                "node",
+                F.coalesce("cluster_id", "label").alias("label"),
+            )
+        )
     bid.unpersist()
     return labels.select("node", F.col("label").alias("cluster_id"))
 
@@ -345,11 +149,11 @@ def _np_min_labels(ea, eb, n: int):
 
 def _forest_contract(drop_roots: bool, out_cols: tuple[str, str]):
     """mapInPandas kernel: contract ALL edges of a partition (accumulated
-    across its Arrow batches — unlike ``_batch_contract``, which is
-    per-batch) to the (node -> component-min) spanning mapping via
-    ``_np_min_labels``.  ``drop_roots`` omits self-labeled rows (forest
-    form, for the first level); keeping them yields the full label table
-    (final level).  Emits in 500k-row chunks to bound Arrow batch size."""
+    across its Arrow batches) to the (node -> component-min) spanning
+    mapping via ``_np_min_labels``.  ``drop_roots`` omits self-labeled rows
+    (forest form, for the first level); keeping them yields the full label
+    table (final level).  Emits in 500k-row chunks to bound Arrow batch
+    size."""
     import numpy as np
     import pandas as pd
 
@@ -384,14 +188,16 @@ def fold_components(
     a_col: str = "a_id",
     b_col: str = "b_id",
     single_task_max_edges: int = 20_000_000,
+    checkpoint_fn=None,
 ) -> DataFrame:
-    """Two-level spanning-forest fold CC — the LOW-ROUND-COUNT path.
+    """Two-level spanning-forest fold CC; returns (node, cluster_id) for
+    every linked node, cluster_id = min node id of its component.
 
-    Star rounds and label propagation both pay O(log n) driver-synchronized
-    rounds (each: shuffles + a convergence action); at sub-huge edge
-    volumes that ROUND LATENCY is the whole cost (measured: CC was 9.5 s of
-    q1's 12.4 s at sf0.1 — 73 Spark jobs for 948k edges among 5k nodes).
-    The fold does exactly two levels and ZERO convergence actions:
+    Iterative engines pay O(log n) driver-synchronized rounds (each:
+    shuffles + a convergence action); at sub-huge edge volumes that ROUND
+    LATENCY is the whole cost (measured: CC was 9.5 s of q1's 12.4 s at
+    sf0.1 — 73 Spark jobs for 948k edges among 5k nodes).  The fold does
+    exactly two levels and ZERO convergence actions:
 
       1. per-partition contraction (``mapInPandas``, no shuffle): each
          task runs the vectorized min-label kernel over ITS edges and
@@ -411,32 +217,29 @@ def fold_components(
     (counted on the materialized forest — a cheap job on already-shrunk
     data) the forest is handed to ``label_prop_components`` instead, whose
     labels over the forest equal labels over the original graph (same
-    connectivity, same node set), so the operator is exact at EVERY scale
-    and merely degrades to the iterative strategy when the fold's
-    single-task assumption breaks.  Labels: cluster_id = min node id,
-    identical to ``connected_components`` for every input.
+    connectivity, same node set), so the operator is exact at EVERY scale.
 
-    Fault-tolerance note for real clusters: the eager ``localCheckpoint``
-    stores the level-1 forest on executors and CUTS lineage — an executor
-    loss between the two levels fails the job (no recompute path) and the
-    caller must resubmit, re-running level 1.  That is the right default
-    for a two-job operator (the window is seconds), but pipelines that
-    need per-round durable resume points should pass ``checkpoint_fn``
-    to ``cluster_assignments`` — its presence routes to the iterative
-    star engine, which checkpoints each round to storage
-    (plans/pipeline.py) and resumes without recompute.
+    Level 1 is materialized once, where its work is needed regardless:
+    the guard count and level 2 read the stored forest, and the caller's
+    DAG is never re-executed.  By default that is an eager
+    ``localCheckpoint``, which keeps the forest on executors — on a real
+    cluster an executor loss between the levels fails the job and a resubmit
+    re-runs level 1.  ``checkpoint_fn(forest, 0) -> DataFrame`` replaces it;
+    the staged pipeline passes a parquet writer (plans/pipeline.py), so the
+    forest lands on durable storage and no ``localCheckpoint`` is left
+    behind.
     """
     edges = edges_df.select(
         F.col(a_col).alias("a"), F.col(b_col).alias("b")
     ).filter(F.col("a") != F.col("b"))
     id_type = dict(edges.dtypes)["a"]
-    # eager checkpoint: level 1 materializes HERE (one job — work that is
-    # needed regardless), the guard count then runs on the stored blocks,
-    # and level 2 reads them without recomputing; lineage is cut so the
-    # caller's DAG is never re-executed
     forest = edges.mapInPandas(
         _forest_contract(True, ("a", "b")), schema=f"a {id_type}, b {id_type}"
-    ).localCheckpoint(eager=True)
+    )
+    if checkpoint_fn is None:
+        forest = forest.localCheckpoint(eager=True)
+    else:
+        forest = checkpoint_fn(forest, 0)
     if forest.count() > single_task_max_edges:
         return label_prop_components(forest, a_col="a", b_col="b")
     return forest.repartition(1).mapInPandas(
@@ -445,69 +248,29 @@ def fold_components(
     )
 
 
-# Measured ITERATIVE-strategy crossover (BENCH.md sf1 table): star wins at
-# sf0.1's 948k edges (round latency dominates), labelprop wins 12.5s vs
-# 16.3s at sf1's 9.2M edges (per-round edge reshuffling dominates).  Both
-# are exact; the threshold sits between the two measured regimes.  Since
-# r6 the DEFAULT strategy is the fold (measured 1.1s vs star's 6.3s at
-# 948k edges AND 5.8s vs labelprop's 26s at 9.2M edges, label-identical);
-# this crossover now governs only explicit iterative-method callers and
-# documents which iterative engine the fold's scale fallback should use
-# (labelprop — the forest it hands over is O(V), the labelprop-favoring
-# regime by construction).
-LABELPROP_MIN_EDGES = 2_000_000
-
-
-def pick_cc_method(n_edges: int, threshold: int = LABELPROP_MIN_EDGES) -> str:
-    """The iterative-strategy selection rule, factored out so it is
-    directly testable: star rounds below the measured crossover, min-label
-    propagation above (iterations ship O(V) labels instead of reshuffling
-    O(E) edges).  ``cluster_assignments(method='auto')`` no longer calls
-    this — the fold beats both iterative strategies at every measured
-    scale — but explicit pipelines that need an iterative engine (e.g.
-    durable per-round parquet checkpoints, plans/pipeline.py) still do."""
-    return "labelprop" if n_edges >= threshold else "star"
-
-
 def cluster_assignments(
     verified_edges: DataFrame,
     all_ids: DataFrame,
     id_col: str = "id",
-    method: str = "auto",
-    labelprop_min_edges: int = LABELPROP_MIN_EDGES,
+    method: str = "fold",
     **kwargs,
 ) -> DataFrame:
     """Cluster labels for every row: component min for linked nodes,
     self-label for singletons.
 
-    ``method``: 'auto' (default) runs the two-level spanning-forest fold
-    (``fold_components``) — measured fastest at EVERY probed scale
-    (1.1s vs star's 6.3s at 948k edges, 5.8s vs labelprop's 26s at 9.2M;
-    BENCH.md) and self-guarding at the scale where its single-task finish
-    would break (forest count > threshold -> exact labelprop fallback on
-    the contracted forest, which is O(V) — labelprop's favoring regime).
-    'star' (large/small star — the O(log n)-round general path),
-    'labelprop' (low-diameter iterative path), and 'fold' force a
-    strategy; ``labelprop_min_edges`` only parameterizes legacy callers
-    that still count-and-pick via ``pick_cc_method``.  Output labels are
-    identical for every method on every input (min id of a component is
-    unique), so the choice is purely a performance decision.
+    Components come from ``fold_components``, which ``kwargs`` go to
+    (``a_col``, ``b_col``, ``single_task_max_edges``, ``checkpoint_fn``).
+    The fold was measured fastest at every probed scale (1.1 s vs star
+    rounds' 6.3 s at 948k edges, 5.8 s vs label propagation's 26 s at
+    9.2M; BENCH.md) with identical labels, so ``method`` accepts only
+    'fold'.
     """
-    if method == "auto":
-        # checkpoint_fn/precontract are star-round knobs (durable
-        # per-round resume points, plans/pipeline.py); their presence
-        # means the caller wants the iterative engine
-        method = (
-            "star"
-            if ("checkpoint_fn" in kwargs or "precontract" in kwargs)
-            else "fold"
+    if method != "fold":
+        raise ValueError(
+            f"method={method!r}: the 'auto', 'star' and 'labelprop' CC "
+            "strategies were removed; 'fold' is the only engine"
         )
-    if method == "labelprop":
-        comps = label_prop_components(verified_edges, **kwargs)
-    elif method == "fold":
-        comps = fold_components(verified_edges, **kwargs)
-    else:
-        comps = connected_components(verified_edges, **kwargs)
+    comps = fold_components(verified_edges, **kwargs)
     return (
         all_ids.select(F.col(id_col).alias("node"))
         .join(comps, on="node", how="left")
@@ -552,14 +315,14 @@ def canonical_corpus(
     row per duplicate cluster.
 
     ``cluster_id`` is the minimum member id by construction
-    (connected_components labels components by min node), so the
+    (``fold_components`` labels components by min node), so the
     representative of every cluster is exactly the row whose id equals its
     cluster id — survivor selection is a single equi-join plus a JVM
     predicate, no aggregation.  At 10^12 rows both sides are partitioned by
     id; the join is the only shuffle and ships ids only.
 
     ``clusters_df`` should be ``cluster_assignments`` output (one row per
-    doc, singletons self-labeled).  Raw ``connected_components`` output
+    doc, singletons self-labeled).  Raw ``fold_components`` output
     (linked nodes only) is tolerated defensively: docs with NO cluster row
     are singletons and kept — an inner join here would silently drop every
     non-duplicated doc from the "canonical corpus".

@@ -16,11 +16,16 @@ physical planning for the probed plan (measured 0.17 s for a
 distinct-over-explode input, r7), and callers construct a FRESH DataFrame
 per query, so the per-Dataset JVM cache never hits across calls.  The
 module therefore memoizes the partition count on the ANALYZED plan's
-``semanticHash`` plus the partition-relevant session state — two
-semantically-equal plans under the same shuffle-partition conf and
-default parallelism always plan to the same partition count, so the
-cache is exact, and repeated constructions of the same query (bench
-passes, per-batch sinks) skip planning entirely.
+``semanticHash`` plus everything else the count depends on: the
+application, the shuffle-partition and file-split confs, the default
+parallelism, and the files a scan reads.  A file scan's ``semanticHash``
+covers its root path, not its listing, so a directory that grew (the
+streaming compaction dirs do) would otherwise be served its old count;
+``inputFiles()`` reads the listing the DataFrame already holds, so
+repeated queries over one read still hit the memo.  Under that key two
+plans always plan to the same partition count, so the cache is exact, and
+repeated constructions of the same query (bench passes, per-batch sinks)
+skip planning entirely.
 """
 
 from __future__ import annotations
@@ -29,16 +34,24 @@ from pyspark.sql import DataFrame
 
 _probe_cache: dict[tuple, int] = {}
 
+_CONF_KEYS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+)
+
 
 def plan_num_partitions(df: DataFrame) -> int:
     """Partition count of ``df``'s physical plan (memoized JVM probe)."""
-    sc = df.sparkSession.sparkContext
+    spark = df.sparkSession
+    sc = spark.sparkContext
     try:
         key = (
-            id(sc),
+            sc.applicationId,
             df._jdf.queryExecution().analyzed().semanticHash(),
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", ""),
+            tuple(spark.conf.get(k) for k in _CONF_KEYS),
             sc.defaultParallelism,
+            hash(frozenset(df.inputFiles())),
         )
     except Exception:  # non-classic backends: fall back to a direct probe
         return df._jdf.rdd().getNumPartitions()

@@ -8,7 +8,7 @@ Stage graph (SURVEY.md §3.4):
     2 cand_edges   : exact + MinHash-LSH (+ SimHash if
                      cfg.simhash_candidates, + pHash)            [band joins]
     3 scored_edges : verify kernel, threshold                    [1 UDF pass]
-    4 clusters     : large-star/small-star to fixpoint           [iterative]
+    4 clusters     : spanning-forest fold, one parquet forest    [2 jobs]
     4b canonical   : (optional) per-cluster max-pixels survivor  [argmin agg]
     5 metrics      : per-stage row counts / wall time            [lineage]
 
@@ -19,7 +19,7 @@ tables — the layout (one table per stage + completion marker + run_config
 lineage row) is identical; parquet-on-dir is the sandbox stand-in.
 
 Scale notes: stage boundaries are exactly the points where a 10^12-row run
-must be able to resume (LSH self-join and CC iterations dominate cost);
+must be able to resume (the LSH self-join and verify dominate cost);
 ``bytes``-typed columns never enter any checkpoint except the signature
 stage input projection (column pruning keeps them out of every shuffle).
 """
@@ -294,13 +294,11 @@ class DedupPipeline:
             "scored_edges", lambda: verify_edges(cand, sig, self.cfg)
         )
 
-        # stage 4: clusters (per-iteration checkpoints inside work_dir)
+        # stage 4: clusters (the fold's level-1 forest is checkpointed to
+        # parquet inside work_dir)
         def _clusters():
-            it_dir = os.path.join(self.work_dir, "cc_iters")
-            os.makedirs(it_dir, exist_ok=True)
-
-            def ckpt(df: DataFrame, i: int) -> DataFrame:
-                p = os.path.join(it_dir, f"iter_{i:03d}")
+            def ckpt(df: DataFrame, _i: int) -> DataFrame:
+                p = os.path.join(self.work_dir, "cc_forest")
                 df.write.mode("overwrite").parquet(p)
                 return self.spark.read.parquet(p)
 

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """sf1 headline: the q1 dedup pipeline at 10x the driver bench scale
-(50k docs = sf0.1 documents x 10 isomorphic corpus copies), plus the CC
-strategy A/B (star rounds vs min-label propagation) whose crossover only
-shows above sf0.1.  Run exclusively; results land in BENCH.md's sf1
-table.  (The r5 contraction pre-pass A/B ran here too and lost at both
-scales — BENCH.md; the precontract flag is still accepted by run_q1.)
+(50k docs = sf0.1 documents x 10 isomorphic corpus copies), with the fold
+CC, once stage-decomposed and once fused as in production.  Run
+exclusively; results land in BENCH.md's sf1 table.  (The star-round,
+label-propagation and contraction pre-pass variants that were A/B'd here
+lost at every scale and were removed — BENCH.md.)
 
 Corpus construction: rep r applies a per-rep ALPHABET ROTATION to the
 text (a -> chr((ord(a)-97+r) % 26 + 97)).  Within a rep, trigram overlap
@@ -57,13 +57,7 @@ def build_corpus(spark):
     return out.repartition(CORES * 4)
 
 
-def run_q1(
-    spark,
-    docs,
-    precontract: bool = False,
-    method: str = "star",
-    fused: bool = False,
-):
+def run_q1(spark, docs, fused: bool = False):
     from fuzzymatch_spark.config import DedupConfig
     from fuzzymatch_spark.operators.cluster import cluster_assignments
     from fuzzymatch_spark.operators.dedup import (
@@ -88,10 +82,7 @@ def run_q1(
         verified = verified.persist()
         n_edges = verified.count()
     t_ver = time.time()
-    kwargs = {"precontract": precontract} if method == "star" else {}
-    clusters = cluster_assignments(
-        verified, sig.select("id"), id_col="id", method=method, **kwargs
-    ).persist()
+    clusters = cluster_assignments(verified, sig.select("id"), id_col="id").persist()
     n_clusters = clusters.select("cluster_id").distinct().count()
     t_cc = time.time()
     stats = {
@@ -125,13 +116,9 @@ def main() -> None:
     docs.count()
 
     variants = (
-        ("plain", {"precontract": False}),
-        ("labelprop", {"method": "labelprop"}),
-        ("fold", {"method": "fold"}),
-        # default method="auto" must pick the measured sf1 regime winner
-        ("auto", {"method": "auto"}),
+        ("fold", {}),
         # the production pipeline shape: no eager verify materialization
-        ("fused", {"method": "auto", "fused": True}),
+        ("fused", {"fused": True}),
     )
     results: dict[str, list[dict]] = {name: [] for name, _ in variants}
     label_sets = {}
@@ -147,10 +134,10 @@ def main() -> None:
             print(f"round={rnd} {name}: {stats}", flush=True)
 
     # label-identical assertion across ALL variants (exact rows)
-    a = label_sets["plain"]
+    a = label_sets["fold"]
     diff = 0
     for name in label_sets:
-        if name == "plain":
+        if name == "fold":
             continue
         b = label_sets[name]
         diff += a.exceptAll(b).count() + b.exceptAll(a).count()

@@ -109,9 +109,8 @@ def test_plan_num_partitions_cache_and_conf_key(spark):
     assert parallelism.plan_num_partitions(spark.range(0, 1000, 1, 7)) == 7
     assert len(parallelism._probe_cache) == n_entries  # cache hit, no growth
 
-    # the cache key includes the shuffle-partition conf (the CC small
-    # regime flips it mid-query): a conf change must create a NEW entry,
-    # never serve the old one
+    # the cache key includes the shuffle-partition conf: a conf change
+    # must create a NEW entry, never serve the old one
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     shuffled = spark.range(0, 1000).selectExpr("id % 7 AS k").distinct()
@@ -125,5 +124,36 @@ def test_plan_num_partitions_cache_and_conf_key(spark):
         # both probes returned what a direct (uncached) probe returns
         assert b == shuffled._jdf.rdd().getNumPartitions()
         assert isinstance(a, int)
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_plan_num_partitions_sees_grown_directory_and_split_conf(spark, tmp_path):
+    """A file scan's semanticHash covers its root path only: a directory
+    that gained files, or a file-split conf change, must be probed afresh
+    rather than served the memoized count.  Each expected count is a
+    direct probe of a fresh read (``rdd()`` is cached per Dataset)."""
+    from fuzzymatch_spark.plans import parallelism
+
+    def direct(path):
+        return spark.read.parquet(path)._jdf.rdd().getNumPartitions()
+
+    path = str(tmp_path / "grow")
+    spark.range(10).coalesce(1).write.parquet(path)
+    assert parallelism.plan_num_partitions(spark.read.parquet(path)) == 1
+    for _ in range(6):
+        spark.range(10).coalesce(1).write.mode("append").parquet(path)
+    assert direct(path) > 1
+    assert parallelism.plan_num_partitions(spark.read.parquet(path)) == direct(path)
+
+    wide = str(tmp_path / "wide")
+    spark.range(20_000).coalesce(1).write.parquet(wide)
+    assert parallelism.plan_num_partitions(spark.read.parquet(wide)) == 1
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1k")
+        assert direct(wide) > 1
+        assert parallelism.plan_num_partitions(spark.read.parquet(wide)) == direct(wide)
     finally:
         spark.conf.set(key, prev)

@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 from fuzzymatch_spark.config import DedupConfig
 from fuzzymatch_spark.kernels.normalize import normalize_bytes
 from fuzzymatch_spark.kernels.trigrams import jaccard, trigram_set
-from fuzzymatch_spark.operators.cluster import cluster_assignments, connected_components
+from fuzzymatch_spark.operators.cluster import (
+    cluster_assignments,
+    fold_components,
+    label_prop_components,
+)
 from fuzzymatch_spark.operators.dedup import (
     candidate_edges,
     compute_signatures,
@@ -179,49 +183,44 @@ def test_planted_recall_and_oracle_parity(spark, corpus):
     assert agree >= 0.99, f"cluster agreement {agree}: {list(mismatches.items())[:5]}"
 
 
-def test_connected_components_basic(spark):
-    edges = spark.createDataFrame(
-        [("b", "a"), ("c", "b"), ("e", "d"), ("f", "f")],
-        "a_id string, b_id string",
-    )
-    got = {
-        (r["node"], r["cluster_id"])
-        for r in connected_components(edges).collect()
-    }
+def _union_find_labels(edges):
+    """Independent CC reference: {(node, component min)} for every node on
+    a non-loop edge, by plain union-find.  Linking the larger root under
+    the smaller keeps every root its component's minimum."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
+def _pairs(df):
+    return {(r["node"], r["cluster_id"]) for r in df.collect()}
+
+
+def test_cc_basic(spark):
+    rows = [("b", "a"), ("c", "b"), ("e", "d"), ("f", "f")]
+    edges = spark.createDataFrame(rows, "a_id string, b_id string")
+    got = _pairs(fold_components(edges))
+    assert got == _union_find_labels(rows)
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d")}
 
 
-def test_cc_convergence_checks_are_amortized(spark, monkeypatch):
-    """The convergence fingerprint (a full job + driver round-trip) fires on
-    every 2nd iteration only — half the driver actions of per-iteration
-    checking on the same chain graph, with identical labels."""
-    import fuzzymatch_spark.operators.cluster as cl
-
-    calls = {"n": 0}
-    orig = cl._fingerprint
-
-    def counting(df):
-        calls["n"] += 1
-        return orig(df)
-
-    monkeypatch.setattr(cl, "_fingerprint", counting)
+def test_cc_chain(spark):
+    # a long chain spreads one component over several level-1 partitions
     chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(40)]
-    edges = spark.createDataFrame(chain, "a_id string, b_id string")
-    got = {r["cluster_id"] for r in cl.connected_components(edges).collect()}
-    assert got == {"n000"}
-    # a 41-node chain converges in ~4-6 star rounds; per-iteration checking
-    # would cost that many fingerprints — every-2nd costs at most half + 1
-    assert calls["n"] <= 4, calls["n"]
-
-
-def test_connected_components_chain_and_star(spark):
-    # long chain exercises multiple large/small-star rounds
-    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(40)]
-    edges = spark.createDataFrame(chain, "a_id string, b_id string")
-    got = {r["cluster_id"] for r in connected_components(edges).collect()}
-    assert got == {"n000"}
-    n = connected_components(edges).count()
-    assert n == 41
+    edges = spark.createDataFrame(chain, "a_id string, b_id string").repartition(4)
+    got = _pairs(fold_components(edges))
+    assert got == _union_find_labels(chain)
+    assert len(got) == 41 and {c for _, c in got} == {"n000"}
 
 
 def test_prefix_filtered_jaccard_equals_full_join(spark):
@@ -262,153 +261,123 @@ def test_prefix_filtered_jaccard_equals_full_join(spark):
     sig.unpersist()
 
 
-def test_cc_precontract_label_identical(spark):
-    """The batch-local union-find pre-pass must not change labels: same
-    components, same min-id cluster ids, on a graph with chains, stars,
-    and singleton-free structure across partition boundaries."""
+def _mixed_graph():
+    """Cliques (diameter 1), long chains (diameter 29) and a random
+    component."""
     import random
-
-    from fuzzymatch_spark.operators.cluster import connected_components
-
-    rng = random.Random(11)
-    edges = []
-    # 40 chains of length 6 + extra random intra-chain links
-    for c in range(40):
-        base = c * 100
-        for i in range(5):
-            edges.append((base + i, base + i + 1))
-        edges.append((base + rng.randint(0, 5), base + rng.randint(0, 5)))
-    df = spark.createDataFrame(edges, "a_id long, b_id long").repartition(8)
-    plain = {(r["node"], r["cluster_id"])
-             for r in connected_components(df).collect()}
-    pre = {(r["node"], r["cluster_id"])
-           for r in connected_components(df, precontract=True).collect()}
-    assert plain == pre
-    assert len({c for _, c in plain}) == 40
-
-
-def test_label_prop_components_matches_star(spark):
-    """labelprop is exact: identical (node, cluster_id) sets vs the star
-    rounds on cliques, chains, and a random graph — including when
-    max_iter forces the star-rounds fallback mid-propagation."""
-    import random
-
-    from fuzzymatch_spark.operators.cluster import (
-        connected_components,
-        label_prop_components,
-    )
 
     rng = random.Random(5)
-    edges = []
-    # 10 cliques of 6 (diameter 1)
-    for c in range(10):
-        ids = [c * 50 + i for i in range(6)]
-        edges += [(x, y) for x in ids for y in ids if x < y]
-    # 5 chains of length 30 (diameter 29 — far beyond max_iter=3)
-    for c in range(5):
-        base = 10_000 + c * 100
-        edges += [(base + i, base + i + 1) for i in range(29)]
-    # random noise component
-    nodes = [50_000 + i for i in range(40)]
-    edges += [tuple(sorted(rng.sample(nodes, 2))) for _ in range(60)]
-
-    df = spark.createDataFrame(edges, "a_id long, b_id long").repartition(8)
-    star = {(r["node"], r["cluster_id"])
-            for r in connected_components(df).collect()}
-    for max_iter in (3, 12):  # 3 forces the fallback on the chains
-        lp = {(r["node"], r["cluster_id"])
-              for r in label_prop_components(df, max_iter=max_iter).collect()}
-        assert lp == star, f"max_iter={max_iter}"
-
-
-def test_cluster_assignments_labelprop_method(spark):
-    from pyspark.sql import functions as F
-
-    from fuzzymatch_spark.operators.cluster import cluster_assignments
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 9)], "a_id long, b_id long"
-    )
-    ids = spark.range(12).select(F.col("id"))
-    a = sorted(tuple(r) for r in
-               cluster_assignments(edges, ids, id_col="id").collect())
-    b = sorted(tuple(r) for r in
-               cluster_assignments(edges, ids, id_col="id",
-                                   method="labelprop").collect())
-    assert a == b
-
-
-def test_cluster_assignments_auto_selection(spark):
-    """Auto mode runs the fold (the every-measured-regime winner); the
-    iterative crossover rule stays testable for explicit callers; all
-    strategies are label-identical."""
-    from pyspark.sql import functions as F
-
-    from fuzzymatch_spark.operators.cluster import (
-        cluster_assignments,
-        pick_cc_method,
-    )
-
-    # the iterative decision rule, at the measured crossover
-    assert pick_cc_method(948_000) == "star"  # sf0.1 regime
-    assert pick_cc_method(9_200_000) == "labelprop"  # sf1 regime
-    assert pick_cc_method(2_000_000) == "labelprop"  # threshold inclusive
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (7, 9), (4, 5)], "a_id long, b_id long"
-    )
-    ids = spark.range(12).select(F.col("id"))
-    star = sorted(tuple(r) for r in
-                  cluster_assignments(edges, ids, id_col="id",
-                                      method="star").collect())
-    # auto == fold, label-identical to star
-    auto = sorted(tuple(r) for r in
-                  cluster_assignments(edges, ids, id_col="id").collect())
-    assert auto == star
-    fold = sorted(tuple(r) for r in
-                  cluster_assignments(edges, ids, id_col="id",
-                                      method="fold").collect())
-    assert fold == star
-
-
-def test_fold_components_matches_star(spark):
-    """The two-level spanning-forest fold is exact: identical
-    (node, cluster_id) sets vs the star rounds on cliques, long chains
-    (high diameter), random graphs, and string ids — including when
-    ``single_task_max_edges`` forces the labelprop fallback on the
-    contracted forest."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from fuzzymatch_spark.operators.cluster import (
-        connected_components,
-        fold_components,
-    )
-
-    rng = random.Random(11)
     edges = []
     for c in range(10):  # cliques of 6
         ids = [c * 50 + i for i in range(6)]
         edges += [(x, y) for x in ids for y in ids if x < y]
-    for c in range(5):  # chains of length 30 — diameter 29
+    for c in range(5):  # chains of length 30
         base = 10_000 + c * 100
         edges += [(base + i, base + i + 1) for i in range(29)]
     nodes = [50_000 + i for i in range(40)]
     edges += [tuple(sorted(rng.sample(nodes, 2))) for _ in range(60)]
+    return edges
+
+
+def test_label_prop_components_matches_star(spark):
+    """labelprop is exact: identical (node, cluster_id) sets vs the
+    union-find reference on cliques, chains, and a random graph —
+    including when max_iter=3 stops propagation short of the chains'
+    diameter and the fold finishes the contracted graph.  (Named for the
+    star-round engine it was first checked against.)"""
+    edges = _mixed_graph()
+    df = spark.createDataFrame(edges, "a_id long, b_id long").repartition(8)
+    want = _union_find_labels(edges)
+    for max_iter in (3, 12):  # 3 forces the fold finish on the chains
+        lp = _pairs(label_prop_components(df, max_iter=max_iter))
+        assert lp == want, f"max_iter={max_iter}"
+
+
+def test_cluster_assignments_labelprop_method(spark):
+    """Label propagation is no longer a ``method`` (asking for it raises);
+    the engine itself, the fold's large-forest finish, labels like the
+    default."""
+    rows = [(1, 2), (2, 3), (7, 9)]
+    edges = spark.createDataFrame(rows, "a_id long, b_id long")
+    ids = spark.range(12).select(F.col("id"))
+    with pytest.raises(ValueError, match="labelprop"):
+        cluster_assignments(edges, ids, id_col="id", method="labelprop")
+    assert _pairs(label_prop_components(edges)) == _union_find_labels(rows)
+    assert _pairs(fold_components(edges)) == _union_find_labels(rows)
+
+
+def test_cluster_assignments_auto_selection(spark):
+    """The default engine is the fold: default and method='fold' both
+    label linked nodes by the union-find reference and self-label
+    singletons."""
+    rows = [(1, 2), (2, 3), (7, 9), (4, 5)]
+    edges = spark.createDataFrame(rows, "a_id long, b_id long")
+    ids = spark.range(12).select(F.col("id"))
+    linked = dict(_union_find_labels(rows))
+    want = sorted((i, linked.get(i, i)) for i in range(12))
+    default = sorted(tuple(r) for r in
+                     cluster_assignments(edges, ids, id_col="id").collect())
+    assert default == want
+    fold = sorted(tuple(r) for r in
+                  cluster_assignments(edges, ids, id_col="id",
+                                      method="fold").collect())
+    assert fold == want
+
+
+def test_cluster_assignments_checkpoint_fn(spark, tmp_path):
+    """``checkpoint_fn`` is the fold's level-1 materializer: called once,
+    as (forest, 0), with labels equal to the union-find reference, and it
+    leaves no persisted RDD or session-conf change behind.  Any method but
+    'fold' raises."""
+    rows = [(1, 2), (2, 3), (7, 9), (4, 5), (9, 11)]
+    edges = spark.createDataFrame(rows, "a_id long, b_id long")
+    ids = spark.range(12).select(F.col("id"))
+    calls = []
+
+    def spy(df, i):
+        calls.append(i)
+        path = str(tmp_path / f"forest_{i}")
+        df.write.parquet(path)
+        return spark.read.parquet(path)
+
+    def persisted_ids():
+        # ids, not a count: the context cleaner may drop RDDs that earlier
+        # tests left persisted while this one runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    confs = ("spark.sql.shuffle.partitions",
+             "spark.sql.adaptive.coalescePartitions.parallelismFirst")
+    rdds_before = persisted_ids()
+    confs_before = [spark.conf.get(k, None) for k in confs]
+    got = sorted(tuple(r) for r in
+                 cluster_assignments(edges, ids, id_col="id",
+                                     checkpoint_fn=spy).collect())
+    assert calls == [0]
+    linked = dict(_union_find_labels(rows))
+    assert got == sorted((i, linked.get(i, i)) for i in range(12))
+    assert persisted_ids() <= rdds_before
+    assert [spark.conf.get(k, None) for k in confs] == confs_before
+    for method in ("star", "labelprop"):
+        with pytest.raises(ValueError, match="star"):
+            cluster_assignments(edges, ids, id_col="id", method=method)
+
+
+def test_fold_components_matches_star(spark):
+    """The two-level spanning-forest fold is exact: identical
+    (node, cluster_id) sets vs the union-find reference on cliques, long
+    chains (high diameter), random graphs, and string ids — including when
+    ``single_task_max_edges`` forces the labelprop finish on the
+    contracted forest.  (Named for the star-round engine it was first
+    checked against.)"""
+    edges = _mixed_graph()
     # duplicate + reversed edges: fold must not depend on dedup/orientation
     edges += [(b, a) for a, b in edges[:20]] + edges[:10]
 
     df = spark.createDataFrame(edges, "a_id long, b_id long").repartition(8)
-    star = {(r["node"], r["cluster_id"])
-            for r in connected_components(df).collect()}
-    fold = {(r["node"], r["cluster_id"])
-            for r in fold_components(df).collect()}
-    assert fold == star
+    want = _union_find_labels(edges)
+    assert _pairs(fold_components(df)) == want
     # threshold 1: level-2 would exceed one task -> exact labelprop finish
-    fb = {(r["node"], r["cluster_id"])
-          for r in fold_components(df, single_task_max_edges=1).collect()}
-    assert fb == star
+    assert _pairs(fold_components(df, single_task_max_edges=1)) == want
 
     # string ids: min label is lexicographic, matching Spark's F.min
     sdf = df.select(
@@ -417,11 +386,10 @@ def test_fold_components_matches_star(spark):
         F.concat(F.lit("n"),
                  F.lpad(F.col("b_id").cast("string"), 6, "0")).alias("b_id"),
     )
-    star_s = {(r["node"], r["cluster_id"])
-              for r in connected_components(sdf).collect()}
-    fold_s = {(r["node"], r["cluster_id"])
-              for r in fold_components(sdf).collect()}
-    assert fold_s == star_s
+    want_s = _union_find_labels(
+        (f"n{a:06d}", f"n{b:06d}") for a, b in edges
+    )
+    assert _pairs(fold_components(sdf)) == want_s
 
     # empty edge set
     empty = spark.createDataFrame([], "a_id long, b_id long")

@@ -271,9 +271,7 @@ def test_incremental_labels_match_full_cc(spark, tmp_path):
         ids = spark.createDataFrame(seen, pschema).select("image_id")
         full = {
             r["image_id"]: r["cluster_id"]
-            for r in cluster_assignments(
-                edges, ids, id_col="image_id", method="star"
-            ).collect()
+            for r in cluster_assignments(edges, ids, id_col="image_id").collect()
         }
         inc = {
             r["id"]: r["label"]
@@ -387,9 +385,7 @@ def test_text_sink_labels_cross_batch(spark, tmp_path):
     )
     full = {
         r["id"]: r["cluster_id"]
-        for r in cluster_assignments(
-            edges, ids, id_col="id", method="star"
-        ).collect()
+        for r in cluster_assignments(edges, ids, id_col="id").collect()
     }
     inc = {r["id"]: r["label"] for r in current_labels(spark, work).collect()}
     assert inc == full
