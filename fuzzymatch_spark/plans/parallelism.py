@@ -25,7 +25,9 @@ streaming compaction dirs do) would otherwise be served its old count;
 repeated queries over one read still hit the memo.  Under that key two
 plans always plan to the same partition count, so the cache is exact, and
 repeated constructions of the same query (bench passes, per-batch sinks)
-skip planning entirely.
+skip planning entirely.  A key that cannot be built raises: the probe
+reads the JVM Dataset either way, so there is no backend a fallback could
+serve, and a silent fallback would only switch the memo off.
 """
 
 from __future__ import annotations
@@ -45,16 +47,13 @@ def plan_num_partitions(df: DataFrame) -> int:
     """Partition count of ``df``'s physical plan (memoized JVM probe)."""
     spark = df.sparkSession
     sc = spark.sparkContext
-    try:
-        key = (
-            sc.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            tuple(spark.conf.get(k) for k in _CONF_KEYS),
-            sc.defaultParallelism,
-            hash(frozenset(df.inputFiles())),
-        )
-    except Exception:  # non-classic backends: fall back to a direct probe
-        return df._jdf.rdd().getNumPartitions()
+    key = (
+        sc.applicationId,
+        df._jdf.queryExecution().analyzed().semanticHash(),
+        tuple(spark.conf.get(k) for k in _CONF_KEYS),
+        sc.defaultParallelism,
+        hash(frozenset(df.inputFiles())),
+    )
     n = _probe_cache.get(key)
     if n is None:
         if len(_probe_cache) >= 1024:

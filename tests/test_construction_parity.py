@@ -128,6 +128,20 @@ def test_plan_num_partitions_cache_and_conf_key(spark):
         spark.conf.set(key, prev)
 
 
+def test_plan_num_partitions_key_error_surfaces(spark, monkeypatch):
+    """An error while building the memo key propagates: it must not
+    quietly fall back to uncached planning."""
+    from pyspark.errors import PySparkException
+    from fuzzymatch_spark.plans import parallelism
+
+    monkeypatch.setattr(
+        parallelism, "_CONF_KEYS",
+        parallelism._CONF_KEYS + ("spark.fuzzymatch.no.such.conf",),
+    )
+    with pytest.raises(PySparkException):
+        parallelism.plan_num_partitions(spark.range(0, 1000, 1, 7))
+
+
 def test_plan_num_partitions_sees_grown_directory_and_split_conf(spark, tmp_path):
     """A file scan's semanticHash covers its root path only: a directory
     that gained files, or a file-split conf change, must be probed afresh
