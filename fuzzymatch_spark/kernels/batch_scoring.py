@@ -16,6 +16,22 @@ batch at once:
   candidates simultaneously (the same prefix-min resolution of the deletion
   chain as kernels/editdist.py, with the query shared across rows)
 * subsequence existence                 — O(qlen) vectorized greedy scan
+* Smith-Waterman                        — one sweep along the query's bytes,
+  vectorized over (rows, candidate positions)
+
+The SW sweep runs along the query because a query atom has a handful of
+bytes and a caption hundreds: the old sweep along candidate positions made
+~25 numpy calls per candidate byte, so a batch cost what its longest row
+cost.  Along the query, the match state reads the previous column one
+position back, and the gap state's in-column recurrence
+``G[i] = max(0, M[i-1] - gs, G[i-1] - ge)`` unrolls (for ``ge >= 0``) to
+``max(0, max_{k<i}(M[k] + ge*k) - gs - ge*(i-1))``: one
+``np.maximum.accumulate`` per column, the prefix trick the DL sweep uses for
+its deletion chain.  Rows run in length-sorted chunks of at most
+``_SW_CHUNK_CELLS`` rows x length cells, in the narrowest integer lane the
+scores provably fit (``_sw_dtype``).  Driver-local ``score_many`` over the
+600 perfbench captions went from 390-500 to ~60 us per candidate, and the
+traced perfbench ``kernels.score_sw_us`` from 675-705 to 87 (4 vCPUs).
 
 Only rows that survive a DP or the subsequence check reach the per-row
 arithmetic finish — and that finish is ``scoring.run_phases`` itself with
@@ -270,83 +286,141 @@ def _batch_is_subsequence(
     return ok
 
 
-def _batch_sw_same_query(
+# Rows x padded-length cells per chunk of the SW column sweep.  The sweep
+# holds about fifteen (rows, length) arrays at once; at 2^15 cells they
+# stay in L2 and the chunk loop's per-call overhead stays small.  On the
+# 600 workload captions (4 vCPUs, int16) 2^14 / 2^15 / 2^16 / 2^18 cells
+# took 31 / 26 / 29 / 39 ms per atom.  A 2,000 x 2,000-byte batch scored
+# at a 35 MB tracemalloc peak chunked and 153 MB as one block.
+_SW_CHUNK_CELLS = 1 << 15
+
+
+def _sw_dtype(sw, qlen: int, width: int):
+    """The narrowest of int16 / int32 / int64 that every value of the
+    column sweep provably fits.
+
+    A match state grows by at most ``score_match + max bonus x first-char
+    multiplier`` per query byte, and the gap prefix adds ``gap_extend`` per
+    candidate position (``_sw_column_sweep``), so the bound is linear in
+    both lengths.  Narrow lanes cut the sweep's memory traffic: on the
+    workload captions int16 / int32 / int64 took 26 / 35 / 57 ms."""
+    bmax = max(abs(sw.bonus_boundary), abs(sw.bonus_boundary_whitespace),
+               abs(sw.bonus_boundary_delimiter), abs(sw.bonus_camel_case),
+               abs(sw.bonus_consecutive))
+    step = abs(sw.score_match) + bmax * max(abs(sw.bonus_first_char_multiplier), 1)
+    bound = (qlen * step + 2 * width * abs(sw.penalty_gap_extend)
+             + abs(sw.penalty_gap_start))
+    for dt in (np.int16, np.int32):
+        if bound <= np.iinfo(dt).max:
+            return dt
+    return np.int64
+
+
+def _sw_column_sweep(
+    C: np.ndarray, bonus: np.ndarray, valid: np.ndarray, qv: np.ndarray, sw
+) -> np.ndarray:
+    """Raw SW score of ONE atom against every row of a (rows, L) chunk,
+    sweeping the atom's bytes: the 2D form of ``sw.smith_waterman_score``
+    (`Sources/FuzzyMatch/SmithWaterman.swift:49-177`) with the loop axes
+    swapped.  ``bonus`` has the sweep's dtype; ``valid`` masks padding.
+
+    Column j's match and carried-bonus states read column j-1 one position
+    back (the diagonal); the padded ``(rows, L + 1)`` state arrays make that
+    shift a view.  The gap state runs along the candidate axis,
+    ``G[i] = max(0, M[i-1] - gs, G[i-1] - ge)``, and with ``ge >= 0`` it
+    unrolls to ``G[i] = max(0, max_{k<i}(M[k] + ge*k) - gs - ge*(i-1))``:
+    one prefix max per column.  Returns int64 best scores (0 = no valid
+    alignment)."""
+    m, L = C.shape
+    dt = bonus.dtype
+    sm, gs, ge = sw.score_match, sw.penalty_gap_start, sw.penalty_gap_extend
+    # position-only terms: the carried bonus floor (consecutive bonus,
+    # raised to the position's own bonus at boundaries), the effective
+    # bonus floor, the gap-path gain and the first-byte score
+    carry_floor = np.where(bonus >= sw.bonus_boundary,
+                           np.maximum(bonus, sw.bonus_consecutive),
+                           np.asarray(sw.bonus_consecutive, dtype=dt))
+    eff_floor = np.maximum(carry_floor, bonus)
+    gap_gain = bonus + sm
+    first = bonus * sw.bonus_first_char_multiplier + sm
+    ramp = np.arange(L, dtype=dt) * ge
+    gap_off = ramp[:-1] + gs
+    zero = dt.type(0)
+
+    Mp = np.zeros((m, L + 1), dtype=dt)
+    Gp = np.zeros((m, L + 1), dtype=dt)
+    Bp = np.zeros((m, L + 1), dtype=dt)
+    M, B = Mp[:, 1:], Bp[:, 1:]
+    for j, ch in enumerate(qv):
+        eq = C == ch
+        if j == 0:
+            np.multiply(first, eq, out=M)
+            np.multiply(bonus, eq, out=B)
+        else:
+            dM, dG, dB = Mp[:, :-1], Gp[:, :-1], Bp[:, :-1]
+            carried = np.maximum(dB, carry_floor)
+            cons = np.maximum(dB, eff_floor)  # consecutive-path score
+            cons += dM
+            cons += sm
+            cons *= dM > 0
+            gap = dG + gap_gain  # gap-path score
+            gap *= dG > 0
+            carried *= cons > 0
+            np.maximum(cons, zero, out=cons)
+            np.copyto(carried, bonus, where=gap > cons)  # ties keep the consecutive path
+            np.maximum(cons, gap, out=cons)
+            # dM / dB read one position behind M / B: write after the reads
+            np.multiply(cons, eq, out=M)
+            np.multiply(carried, eq, out=B)
+        if L > 1:
+            acc = np.maximum.accumulate(M + ramp, axis=1)[:, :-1]
+            acc -= gap_off
+            np.maximum(acc, zero, out=Gp[:, 2:])
+    last = np.maximum(M, Gp[:, 1:])
+    last *= valid
+    return last.max(axis=1).astype(np.int64)
+
+
+def _batch_sw_scores(
     C: np.ndarray,
     lens: np.ndarray,
     bonus: np.ndarray,
-    qv: np.ndarray,
+    rows: np.ndarray,
+    atoms: list[np.ndarray],
     sw,
 ) -> np.ndarray:
-    """Raw SW score of ONE query (or atom) against N candidates in one DP
-    sweep — the 2D form of ``sw.smith_waterman_score``
-    (`Sources/FuzzyMatch/SmithWaterman.swift:49-177`): three states
-    (match / gap / carried-consecutive-bonus), zero floor, boundary bonus
-    carried through consecutive runs.  Rows whose candidate ended are
-    frozen; returns int64 best scores (0 = no valid alignment)."""
-    m = C.shape[0]
-    q = len(qv)
-    if m == 0 or q == 0:
-        return np.zeros(m, dtype=np.int64)
-    maxc = int(lens.max())
-    Q = qv.astype(np.int16)[None, :]  # (1, q)
+    """Raw SW scores, shape ``(len(atoms), rows.size)``, of each atom
+    against the non-empty candidate rows ``rows`` of the padded batch
+    matrices.
 
-    score_match = sw.score_match
-    gap_start = sw.penalty_gap_start
-    gap_extend = sw.penalty_gap_extend
-    bonus_cons = sw.bonus_consecutive
-    bonus_bound = sw.bonus_boundary
-    first_mult = sw.bonus_first_char_multiplier
-
-    M = np.zeros((m, q), dtype=np.int64)
-    G = np.zeros((m, q), dtype=np.int64)
-    B = np.zeros((m, q), dtype=np.int64)
-    best = np.zeros(m, dtype=np.int64)
-    zero = np.int64(0)
-
-    for i in range(maxc):
-        active = i < lens
-        if not active.any():
-            break
-        cand = C[:, i : i + 1]  # (m, 1)
-        pos_bonus = bonus[:, i : i + 1]  # (m, 1)
-        eq = Q == cand  # (m, q)
-
-        new_G = np.maximum(np.maximum(M - gap_start, G - gap_extend), zero)
-
-        diag_M = np.zeros((m, q), dtype=np.int64)
-        diag_G = np.zeros((m, q), dtype=np.int64)
-        diag_B = np.zeros((m, q), dtype=np.int64)
-        diag_M[:, 1:] = M[:, :-1]
-        diag_G[:, 1:] = G[:, :-1]
-        diag_B[:, 1:] = B[:, :-1]
-
-        carried = np.maximum(diag_B, bonus_cons)
-        carried = np.where(
-            pos_bonus >= bonus_bound, np.maximum(carried, pos_bonus), carried
-        )
-        effective = np.maximum(carried, pos_bonus)
-        from_cons = np.where(diag_M > 0, diag_M + score_match + effective, zero)
-        from_gap = np.where(diag_G > 0, diag_G + score_match + pos_bonus, zero)
-
-        cons_w = from_cons > 0
-        new_M = np.where(cons_w, from_cons, zero)
-        new_B = np.where(cons_w, carried, zero)
-        gap_w = from_gap > new_M
-        new_M = np.where(gap_w, from_gap, new_M)
-        new_B = np.where(gap_w, np.broadcast_to(pos_bonus, (m, q)), new_B)
-        new_M[:, 0] = score_match + pos_bonus[:, 0] * first_mult
-        new_B[:, 0] = pos_bonus[:, 0]
-        new_M = np.where(eq, new_M, zero)
-        new_B = np.where(eq, new_B, zero)
-
-        np.copyto(M, new_M, where=active[:, None])
-        np.copyto(G, new_G, where=active[:, None])
-        np.copyto(B, new_B, where=active[:, None])
-
-        last = np.maximum(M[:, -1], G[:, -1])
-        best = np.where(active & (last > best), last, best)
-
-    return best
+    Rows run in length-sorted chunks of at most ``_SW_CHUNK_CELLS`` rows x
+    padded-length cells, so a long caption pads only its own chunk and the
+    sweep's memory stays flat in the batch size; scores come back in
+    ``rows`` order."""
+    out = np.zeros((len(atoms), rows.size), dtype=np.int64)
+    if rows.size == 0:
+        return out
+    if sw.penalty_gap_extend < 0:
+        raise ValueError("the SW gap sweep needs penalty_gap_extend >= 0")
+    qmax = max(len(a) for a in atoms)
+    order = np.argsort(lens[rows], kind="stable")
+    slens = lens[rows][order]
+    n = rows.size
+    a = 0
+    while a < n:
+        b = min(n, a + max(1, _SW_CHUNK_CELLS // int(slens[a])))
+        if (b - a) * int(slens[b - 1]) > _SW_CHUNK_CELLS:
+            b = a + max(1, _SW_CHUNK_CELLS // int(slens[b - 1]))
+        width = int(slens[b - 1])
+        pos = order[a:b]
+        sel = rows[pos]
+        Cc = C[sel, :width]
+        bc = bonus[sel, :width].astype(_sw_dtype(sw, qmax, width))
+        valid = np.arange(width) < lens[sel][:, None]
+        for t, av in enumerate(atoms):
+            out[t, pos] = _sw_column_sweep(Cc, bc, valid, av, sw)
+        a = b
+    return out
 
 
 def _batch_score_sw(
@@ -399,27 +473,22 @@ def _batch_score_sw(
     idx = np.nonzero(alive)[0]
     if idx.size == 0:
         return
-    Csub = C[idx]
-    lsub = lens[idx]
-    bsub = cands.sw_bonus_matrix(sw)[idx]
+    bonus = cands.sw_bonus_matrix(sw)
 
     if len(query.atoms) > 1:
         if query.max_sw_score <= 0:
             return
-        total = np.zeros(idx.size, dtype=np.int64)
-        ok = np.ones(idx.size, dtype=bool)
-        for atom in query.atoms:
-            av = np.frombuffer(atom, dtype=np.uint8).astype(np.int16)
-            s = _batch_sw_same_query(Csub, lsub, bsub, av, sw)
-            ok &= s > 0
-            total += np.where(ok, s, 0)
-        ns = np.clip(total / query.max_sw_score, 0.0, 1.0)
+        atoms = [np.frombuffer(a, dtype=np.uint8).astype(np.int16)
+                 for a in query.atoms]
+        raw = _batch_sw_scores(C, lens, bonus, idx, atoms, sw)
+        ok = (raw > 0).all(axis=0)
+        ns = np.clip(raw.sum(axis=0) / query.max_sw_score, 0.0, 1.0)
         for j in np.nonzero(ok & (ns >= min_score))[0]:
             scores[idx[j]] = float(ns[j])
             kinds[idx[j]] = "alignment"
         return
 
-    raw_score = _batch_sw_same_query(Csub, lsub, bsub, qv, sw)
+    raw_score = _batch_sw_scores(C, lens, bonus, idx, [qv], sw)[0]
     base = np.full(idx.size, -1.0)
     if query.max_sw_score > 0:
         ns = np.clip(raw_score / query.max_sw_score, 0.0, 1.0)
@@ -431,7 +500,7 @@ def _batch_score_sw(
     # per-row arithmetic on the small survivor set
     acr_candidates = np.zeros(idx.size, dtype=bool)
     if 2 <= qlen <= 8:
-        acr_candidates = _batch_is_subsequence(Csub, lsub, qv)
+        acr_candidates = _batch_is_subsequence(C[idx], lens[idx], qv)
     for j in range(idx.size):
         k = idx[j]
         best_score = base[j]

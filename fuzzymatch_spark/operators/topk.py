@@ -17,13 +17,23 @@ expensive ordering ourselves (`Sources/FuzzyMatch/Prefilters.swift:20-27`):
 At 100 TB the signature table is computed once and reused across queries
 (the reference amortizes `prepare()` the same way).  A query then runs a
 columnar scan, the pruned UDF and a TakeOrderedAndProject (no full sort,
-no single-node collect) in 2 Spark jobs, the repartition guard's included.
-On a small corpus the scan and the kernel are not the per-query cost; the
-Python worker's fixed per-task cost is.  perfbench ``fuzzy_search`` (600
-captions, 4 vCPUs, traced) spent ``topk.execute_s`` 0.46 s per query with
-Spark's stock worker daemon, mostly re-reading Spark's own archives in
-every task, and 0.28 s with the daemon ``get_spark`` sets (see
-``session.py``).  The jobs per query (2) did not change.
+no single-node collect).
+
+Jobs per query follow the input's size.  An input narrower than the cores
+is spread by a round-robin exchange, which costs a job of its own: 2 jobs.
+A narrow input whose plan estimates under ``SMALL_INPUT_BYTES`` (8 KiB),
+or an input already as wide as the cores, runs in 1 job (see
+``plans/parallelism.py`` for the measured floor).  perfbench
+``fuzzy_search`` (4 vCPUs, traced) pairs both: its ED query over the
+caption vocabulary runs in 1 job, its SW query over 600 captions in 2.
+On a small corpus the per-query cost is the Python worker's per-task
+cost, the exchange's job and the kernel.  Traced perfbench per query:
+``topk.execute_s`` 0.46 s with Spark's stock worker daemon, which re-read
+its own archives in every task; 0.31-0.40 s under the daemon ``get_spark``
+sets (see ``session.py``); 0.20 s once the ED query skips its exchange and
+the SW kernel sweeps along the query (``kernels/batch_scoring.py``;
+``kernels.score_sw_us`` 675-705 -> 87).  Construction is ~0.07 s: one
+``select``, ``filter`` and ``selectExpr`` per query, sort keys as SQL.
 """
 
 from __future__ import annotations
@@ -34,7 +44,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 from fuzzymatch_spark.config import MatchConfig
 from fuzzymatch_spark.functions.udfs import make_score_udf
 from fuzzymatch_spark.kernels.scoring import prepare_query
-from fuzzymatch_spark.plans.parallelism import ensure_min_partitions
+from fuzzymatch_spark.plans.parallelism import (
+    SMALL_INPUT_BYTES,
+    ensure_min_partitions,
+)
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _signed64(x: int) -> int:
@@ -74,17 +92,27 @@ def score_candidates(
     q = prepare_query(query_text, config)
     filtered = prefilter_columns(df, text_col, q, mask_col=mask_col)
     # the score UDF is CPU-bound: never let an under-partitioned input
-    # (single-row-group parquet) serialize it onto one core
-    filtered = ensure_min_partitions(filtered)
+    # (single-row-group parquet) serialize it onto one core, unless it is
+    # too small to pay for the exchange's extra job
+    filtered = ensure_min_partitions(filtered, floor_bytes=SMALL_INPUT_BYTES)
     # asNondeterministic blocks Catalyst from pushing the isNotNull filter
     # (and a duplicate UDF evaluation) below the repartition exchange
     score_udf = make_score_udf(q).asNondeterministic()
-    scored = filtered.withColumn("_m", score_udf(F.col(text_col)))
+    # one select, filter and selectExpr (a py4j round trip each, plus one
+    # per listed column) in withColumn's shape: an input ``score``/``kind``
+    # is replaced in place, an input ``_m`` dropped, new columns go last
+    cols = filtered.columns
+    if "_m" in cols:
+        filtered = filtered.drop("_m")
+        cols = [c for c in cols if c != "_m"]
+    lifted = {"score": "_m.score AS score", "kind": "_m.kind AS kind"}
+    out = [lifted.get(c.lower(), _quote(c)) for c in cols]
+    lower = {c.lower() for c in cols}
+    out += [e for c, e in lifted.items() if c not in lower]
     return (
-        scored.filter(F.col("_m.score").isNotNull())
-        .withColumn("score", F.col("_m.score"))
-        .withColumn("kind", F.col("_m.kind"))
-        .drop("_m")
+        filtered.select("*", score_udf(F.col(text_col)).alias("_m"))
+        .filter("_m.score IS NOT NULL")
+        .selectExpr(*out)
     )
 
 
@@ -108,8 +136,9 @@ def top_matches(
     candidate-asc leg makes the whole order reproducible (SURVEY.md §2.7).
     """
     scored = score_candidates(df, text_col, query_text, config, mask_col=mask_col)
+    t = _quote(text_col)
     return scored.orderBy(
-        F.desc("score"), F.asc(F.length(text_col)), F.asc(text_col)
+        F.expr("score").desc(), F.expr(f"length({t})"), F.expr(t)
     ).limit(k)
 
 
@@ -146,7 +175,7 @@ def top_matches_levenshtein(
         bitmask_tolerance=0,
     )
     filtered = prefilter_columns(df, text_col, shim, mask_col=None)
-    filtered = ensure_min_partitions(filtered)
+    filtered = ensure_min_partitions(filtered, floor_bytes=SMALL_INPUT_BYTES)
 
     s = float(min_score)
 
@@ -293,7 +322,7 @@ def top_matches_fields(
     q = prepare_query(query_text, config)
     score_udf = make_score_udf(q).asNondeterministic()
 
-    df = ensure_min_partitions(df)
+    df = ensure_min_partitions(df, floor_bytes=SMALL_INPUT_BYTES)
 
     scored = df
     for c in field_cols:

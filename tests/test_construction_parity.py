@@ -102,11 +102,11 @@ def test_plan_num_partitions_cache_and_conf_key(spark):
     # scan-shaped plans (ensure_min_partitions' main use case) probe their
     # real width, and a semantically-equal fresh DataFrame hits the cache
     df = spark.range(0, 1000, 1, 7)
-    assert parallelism.plan_num_partitions(df) == 7
+    assert parallelism.plan_probe(df)[0] == 7
     parallelism._probe_cache.clear()
-    assert parallelism.plan_num_partitions(spark.range(0, 1000, 1, 7)) == 7
+    assert parallelism.plan_probe(spark.range(0, 1000, 1, 7))[0] == 7
     n_entries = len(parallelism._probe_cache)
-    assert parallelism.plan_num_partitions(spark.range(0, 1000, 1, 7)) == 7
+    assert parallelism.plan_probe(spark.range(0, 1000, 1, 7))[0] == 7
     assert len(parallelism._probe_cache) == n_entries  # cache hit, no growth
 
     # the cache key includes the shuffle-partition conf: a conf change
@@ -116,10 +116,10 @@ def test_plan_num_partitions_cache_and_conf_key(spark):
     shuffled = spark.range(0, 1000).selectExpr("id % 7 AS k").distinct()
     try:
         spark.conf.set(key, "5")
-        a = parallelism.plan_num_partitions(shuffled)
+        a = parallelism.plan_probe(shuffled)[0]
         n_entries = len(parallelism._probe_cache)
         spark.conf.set(key, "3")
-        b = parallelism.plan_num_partitions(shuffled)
+        b = parallelism.plan_probe(shuffled)[0]
         assert len(parallelism._probe_cache) == n_entries + 1
         # both probes returned what a direct (uncached) probe returns
         assert b == shuffled._jdf.rdd().getNumPartitions()
@@ -139,7 +139,7 @@ def test_plan_num_partitions_key_error_surfaces(spark, monkeypatch):
         parallelism._CONF_KEYS + ("spark.fuzzymatch.no.such.conf",),
     )
     with pytest.raises(PySparkException):
-        parallelism.plan_num_partitions(spark.range(0, 1000, 1, 7))
+        parallelism.plan_probe(spark.range(0, 1000, 1, 7))
 
 
 def test_plan_num_partitions_sees_grown_directory_and_split_conf(spark, tmp_path):
@@ -154,20 +154,20 @@ def test_plan_num_partitions_sees_grown_directory_and_split_conf(spark, tmp_path
 
     path = str(tmp_path / "grow")
     spark.range(10).coalesce(1).write.parquet(path)
-    assert parallelism.plan_num_partitions(spark.read.parquet(path)) == 1
+    assert parallelism.plan_probe(spark.read.parquet(path))[0] == 1
     for _ in range(6):
         spark.range(10).coalesce(1).write.mode("append").parquet(path)
     assert direct(path) > 1
-    assert parallelism.plan_num_partitions(spark.read.parquet(path)) == direct(path)
+    assert parallelism.plan_probe(spark.read.parquet(path))[0] == direct(path)
 
     wide = str(tmp_path / "wide")
     spark.range(20_000).coalesce(1).write.parquet(wide)
-    assert parallelism.plan_num_partitions(spark.read.parquet(wide)) == 1
+    assert parallelism.plan_probe(spark.read.parquet(wide))[0] == 1
     key = "spark.sql.files.maxPartitionBytes"
     prev = spark.conf.get(key)
     try:
         spark.conf.set(key, "1k")
         assert direct(wide) > 1
-        assert parallelism.plan_num_partitions(spark.read.parquet(wide)) == direct(wide)
+        assert parallelism.plan_probe(spark.read.parquet(wide))[0] == direct(wide)
     finally:
         spark.conf.set(key, prev)

@@ -411,3 +411,78 @@ def test_tile_and_mirror_dedup_payload_below_exchange(spark):
         plan = out._jdf.queryExecution().executedPlan().toString()
         first_ex = plan.index("Exchange")
         assert "bytes#" not in plan[:first_ex], plan[:first_ex]
+
+
+def _jobs_of(spark, df) -> tuple[list, int]:
+    """(collected rows, jobs the collect ran), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _single_file(spark, tmp_path, name, n_rows):
+    path = str(tmp_path / name)
+    (spark.range(n_rows)
+     .selectExpr("id", "concat('query', id % 97, ' row ', id) AS text")
+     .coalesce(1).write.parquet(path))
+    return spark.read.parquet(path)
+
+
+def test_small_topk_input_skips_exchange(spark, tmp_path, monkeypatch):
+    """A single-file input below the byte floor is scored in its one task:
+    no round-robin exchange, one job, and the rows of the spread plan."""
+    from fuzzymatch_spark.operators import topk
+    from fuzzymatch_spark.plans.parallelism import SMALL_INPUT_BYTES, plan_probe
+
+    df = _single_file(spark, tmp_path, "tiny", 40)
+    n, size = plan_probe(df)
+    assert n == 1 and size < SMALL_INPUT_BYTES
+    small = topk.top_matches(df, "text", "qeury", k=5)
+    assert "RoundRobinPartitioning" not in plan_of(small)
+    rows, jobs = _jobs_of(spark, small)
+    assert jobs == 1 and rows
+
+    monkeypatch.setattr(topk, "SMALL_INPUT_BYTES", 0)
+    spread = topk.top_matches(df, "text", "qeury", k=5)
+    assert "RoundRobinPartitioning" in plan_of(spread)
+    assert spread.collect() == rows
+
+
+def test_large_topk_input_keeps_exchange(spark, tmp_path):
+    """A single-file input above the floor still spreads over the cores."""
+    from fuzzymatch_spark.operators import topk
+    from fuzzymatch_spark.plans.parallelism import SMALL_INPUT_BYTES, plan_probe
+
+    df = _single_file(spark, tmp_path, "big", 20_000)
+    n, size = plan_probe(df)
+    assert n == 1 and size >= SMALL_INPUT_BYTES
+    assert "RoundRobinPartitioning" in plan_of(topk.top_matches(df, "text", "qeury"))
+
+
+def test_wide_topk_input_has_no_exchange(spark):
+    """An input already as wide as the cores is never repartitioned."""
+    from fuzzymatch_spark.operators import topk
+
+    wide = spark.range(0, 400, 1, spark.sparkContext.defaultParallelism).selectExpr(
+        "concat('query', id) AS text"
+    )
+    assert "RoundRobinPartitioning" not in plan_of(topk.top_matches(wide, "text", "qeury"))
+
+
+def test_image_source_keeps_exchange_for_small_input(spark, tmp_path):
+    """Callers other than single-query top-k pass no floor: a small
+    single-file docs frame still spreads its image synthesis."""
+    from fuzzymatch_spark.plans.parallelism import SMALL_INPUT_BYTES, plan_probe
+    from fuzzymatch_spark.sources.images import build_images_df
+
+    docs = _single_file(spark, tmp_path, "docs", 20).withColumnRenamed("id", "doc_id")
+    assert plan_probe(docs)[1] < SMALL_INPUT_BYTES
+    images = build_images_df(spark, docs, "doc_id", "text")
+    assert "RoundRobinPartitioning" in plan_of(images)

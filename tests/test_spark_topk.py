@@ -135,3 +135,26 @@ def test_top_matches_fields_single_field(spark, corpus_df):
     assert [(r["text"], r["score"]) for r in rows] == [
         (r["text"], r["score"]) for r in base
     ]
+
+
+def test_score_candidates_replaces_score_and_kind_in_place(spark, corpus_df):
+    """An input that already has ``score``/``kind`` (or a ``_m``) columns
+    gets them replaced where they stand, as ``withColumn`` would; new
+    columns go last."""
+    cfg = MatchConfig()
+    plain = score_candidates(corpus_df, "text", "getUser", cfg)
+    assert plain.columns == ["id", "text", "score", "kind"]
+    want = {(r["text"], r["score"], r["kind"]) for r in plain.collect()}
+
+    stale = corpus_df.selectExpr(
+        "-1.0D AS score", "id", "'stale' AS kind", "text", "0 AS _m"
+    )
+    out = score_candidates(stale, "text", "getUser", cfg)
+    assert out.columns == ["score", "id", "kind", "text"]
+    assert out.schema["score"].dataType.typeName() == "double"
+    assert {(r["text"], r["score"], r["kind"]) for r in out.collect()} == want
+
+    only_kind = corpus_df.selectExpr("text", "'stale' AS KIND")
+    out = score_candidates(only_kind, "text", "getUser", cfg)
+    assert out.columns == ["text", "kind", "score"]
+    assert {(r["text"], r["score"], r["kind"]) for r in out.collect()} == want
