@@ -634,7 +634,6 @@ def decontaminate_embeddings(
     vec_col: str = "embedding",
     min_cosine: float = 0.95,
     method: str = "broadcast",
-    n_centroids: int = 8,
 ) -> DataFrame:
     """Embedding-space decontamination: flag every corpus row whose
     vector is within ``min_cosine`` of ANY benchmark/eval vector — the
@@ -642,7 +641,7 @@ def decontaminate_embeddings(
     that survive the exact n-gram, fuzzy-shingle, and pHash screens
     (paraphrases, re-crops, style transfers).
 
-    Three methods, identical output columns:
+    Two methods, identical output columns:
 
     * ``"broadcast"`` (exact, the ORACLE path): the benchmark side —
       small by construction — broadcasts through a
@@ -670,15 +669,11 @@ def decontaminate_embeddings(
       (dim-64 doubles: 51 MB at 1e5); beyond that,
       ``decontaminate_embeddings_sharded`` runs the GEMM per benchmark
       shard and combines the flags.
-    * ``"ivf"`` (candidate-pruned path): centroids fit on the
-      BENCHMARK (cheap — it is the small side), both sides assigned to
-      cells in-task, and the cosine check runs only against same-cell
-      benchmark vectors — SemDeDup's recall shape (`ivf_dup_pairs`).
-      Measured honestly SLOWER than "blas" at 1k bench (27 s vs
-      0.87 s): its per-candidate cosine is a higher-order-function
-      expression (~0.5 us/element) while the GEMM runs ~0.3 ns/element,
-      a gap no cell pruning closes at small |bench| — prefer "blas"
-      whenever the benchmark fits the closure.
+
+    An ``"ivf"`` method (benchmark-fit centroids, same-cell cosines) was
+    removed: it measured 27 s against 0.87 s for ``"blas"`` at 1k bench
+    vectors, since its per-candidate cosine is an interpreted
+    higher-order-function expression.  Passing it raises ``ValueError``.
 
     Cosine is rounded to 4 decimals BEFORE thresholding so the
     predicate is reproducible cross-engine (`cosine_dup_pairs`
@@ -689,38 +684,19 @@ def decontaminate_embeddings(
         return _decontaminate_embeddings_blas(
             corpus_df, bench_df, bench_id, vec_col, min_cosine
         )
-    if method not in ("broadcast", "ivf"):
+    if method != "broadcast":
         raise ValueError(
-            f"method must be 'broadcast', 'blas', or 'ivf': {method!r}"
+            f"method must be 'broadcast' or 'blas': {method!r} (the 'ivf' "
+            "method was removed as slower than 'blas')"
         )
     bench = bench_df.select(
         F.col(bench_id).alias("_bid"), F.col(vec_col).alias("_bvec")
     )
     corpus = corpus_df.select(corpus_id, vec_col)
     cos = F.round(_safe_cos(F.col(vec_col), F.col("_bvec")), 4)
-    if method == "broadcast":
-        cand = corpus.crossJoin(F.broadcast(bench))
-    else:
-        # fit the codebook on the (small) benchmark side; bench ids are
-        # arbitrary, so re-index densely first (one window sort over the
-        # broadcastable side, never the corpus)
-        from pyspark.sql.window import Window
-
-        dense = bench.withColumn(
-            "_cid",
-            F.row_number().over(Window.orderBy("_bid")) - F.lit(1),
-        )
-        cents, _ = _centroid_matrix(dense, "_bvec", "_cid", n_centroids)
-        cand = ivf_assign(corpus, vec_col, cents).join(
-            F.broadcast(
-                ivf_assign(
-                    bench.withColumnRenamed("_bvec", vec_col), vec_col, cents
-                ).withColumnRenamed(vec_col, "_bvec")
-            ),
-            on="cell",
-        )
     hits = (
-        cand.withColumn("_cos", cos)
+        corpus.crossJoin(F.broadcast(bench))
+        .withColumn("_cos", cos)
         .filter(F.col("_cos") >= F.lit(min_cosine))
         .groupBy(corpus_id)
         .agg(

@@ -249,11 +249,11 @@ def minhash_band_edges(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     The band index is ALREADY folded into the key (``minhash_bands`` hashes
     ``xxhash64(band_i, slice)``), so the self-join groups on the single
     64-bit ``key`` — the 4-byte ``band`` column never enters the exchange
-    (same fused-key shape as ``hamming_band_keys(split_band_key=False)``,
-    which measured −30%/−23% join wall at 8/32 cores).  Cross-band bucket
-    merges require an xxhash64 collision — the same (negligible) risk the
-    within-band join already carries, and a collision only ADDS a candidate
-    pair that downstream verification scores anyway; recall is unaffected.
+    (same fused-key shape as ``hamming_band_keys``, which measured
+    −30%/−23% join wall at 8/32 cores).  Cross-band bucket merges require
+    an xxhash64 collision — the same (negligible) risk the within-band join
+    already carries, and a collision only ADDS a candidate pair that
+    downstream verification scores anyway; recall is unaffected.
     """
     bands = minhash_bands(sig_df, cfg).select("id", "key")
 
@@ -263,47 +263,63 @@ def minhash_band_edges(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
     return pairs.withColumn("source", F.lit("minhash"))
 
 
+def check_hamming_radius(
+    n_bands: int, max_hamming: int, name: str = "max_hamming"
+) -> None:
+    """Raise ``ValueError`` unless ``0 <= max_hamming < n_bands`` and
+    ``n_bands`` splits the 64-bit hash into equal blocks.
+
+    The Manku banding finds a pair only if it agrees on at least one of
+    the C(m, m - k) block combos, which pigeonhole guarantees while
+    ``k < m``; a radius of ``n_bands`` or more would drop pairs whose
+    differing bits touch every block.  Every Hamming join checks its
+    radius here, before it builds or persists anything."""
+    if n_bands < 1 or 64 % n_bands:
+        raise ValueError(f"n_bands ({n_bands}) must divide 64")
+    if not 0 <= max_hamming < n_bands:
+        raise ValueError(
+            f"{name} ({max_hamming}) must be >= 0 and < n_bands "
+            f"({n_bands}) for recall-complete banding; raise n_bands "
+            "instead"
+        )
+
+
 def hamming_band_keys(
     df: DataFrame,
     id_col: str,
     hash_col: str,
     n_bands: int,
     max_hamming: int,
-    split_band_key: bool = True,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
-    """(id, hash, band, key) Manku combination-key decomposition of a
-    64-bit hash column — the shared banding for the batch self-join and
-    the incremental (streaming) new-vs-existing join.  Keys are pure
-    integer column expressions (28 shift/or ops per row for m=8, k=6), so
-    history can be re-keyed in-task from stored hashes — no band table to
-    persist.
+    """(id, hash, bk) Manku combination-key decomposition of a 64-bit hash
+    column — the one band-key form of every Hamming join: the batch
+    self-join (``_hamming_band_edges``), the tile join and the probe join
+    (``hamming_probe_pairs``).  Keys are pure integer column expressions
+    (28 shift/or ops per row for m=8, k=6), so history can be re-keyed
+    in-task from stored hashes — no band table to persist.
 
-    With ``split_band_key=False`` the band index stays folded into the
-    key's high bits and the output is (id, hash, bk) with ONE int64
-    bucket column — the batch self-join groups on that directly, so the
-    big exchange shuffles a single 8-byte key instead of a 12-byte
-    (band, key) struct per band row."""
+    The combo index is folded into the key's high bits, so each row
+    carries ONE int64 bucket column ``bk`` and the exchanges shuffle a
+    single 8-byte key instead of a (band, key) struct.  A/B at 400k
+    images against the (band, key) form: identical 109,762-edge output,
+    join wall −30% at local[8] (11.17 → 7.80 s) and −23% at local[32]
+    (10.86 → 8.41 s), min of 3 alternating reps.
+
+    Raises ``ValueError`` unless ``0 <= max_hamming < n_bands``
+    (``check_hamming_radius``)."""
     import itertools
 
-    assert 64 % n_bands == 0
+    check_hamming_radius(n_bands, max_hamming)
     m = n_bands
-    k = min(max_hamming, m - 1)
-    c = m - k  # blocks per key
+    c = m - max_hamming  # blocks per key
     width = 64 // m
     mask = (1 << width) - 1
-
-    def block(i: int):
-        return F.shiftrightunsigned(F.col(hash_col), i * width).bitwiseAND(
-            F.lit(mask)
-        )
-
     key_width = c * width  # bits of the concatenated-block key
     n_combos = sum(1 for _ in itertools.combinations(range(m), c))
-    # the fused encoding folds the combo index ABOVE the key bits into one
-    # signed int64 — it must fit (key_width == 64 means a single combo and
-    # nothing to fold, see below)
-    assert key_width >= 64 or (n_combos - 1) << key_width <= (1 << 63) - 1, (
+    # the combo index folds in ABOVE the key bits of one signed int64
+    # (at max_hamming == 0 there is a single combo and nothing to fold)
+    assert (n_combos - 1) << key_width <= (1 << 63) - 1, (
         f"fused band key overflows int64: {n_combos} combos above "
         f"{key_width} key bits"
     )
@@ -322,44 +338,50 @@ def hamming_band_keys(
         key = "CAST(0 AS BIGINT)"
         for j, blk in enumerate(combo):
             key = f"({key} | shiftleft({block_sql(blk)}, {j * width}))"
-        # fold the combo index into the SAME long above the key bits: one
-        # narrow int64 shuffle column instead of a (band, key) struct —
-        # injective because key < 2^key_width (c < m, so there is room;
-        # at c == m there is a single combo and ci == 0 ORs to a no-op)
+        # injective because key < 2^key_width (ci == 0 ORs to a no-op)
         if ci:
             key = f"({key} | {ci << key_width}L)"
         combined.append(key)
 
-    carry = list(carry_cols or [])
-    out = df.select(
+    return df.select(
         F.col(id_col).alias("id"),
         F.col(hash_col),
-        *carry,
+        *(carry_cols or []),
         F.expr(f"explode(array({', '.join(combined)}))").alias("bk"),
     )
-    if split_band_key:
-        if key_width >= 64:
-            # max_hamming == 0 -> a single full-width combo.  JVM long
-            # shifts mask the amount mod 64, so shiftrightunsigned(bk, 64)
-            # would be an identity, NOT 0 — special-case the (band, key)
-            # contract: band is constantly 0, the key IS the hash.
-            out = out.select(
-                "id",
-                hash_col,
-                *carry,
-                F.lit(0).alias("band"),
-                F.col("bk").alias("key"),
-            )
-        else:
-            key_mask = (1 << key_width) - 1
-            out = out.select(
-                "id",
-                hash_col,
-                *carry,
-                F.shiftrightunsigned("bk", key_width).cast("int").alias("band"),
-                F.col("bk").bitwiseAND(F.lit(key_mask)).alias("key"),
-            )
-    return out
+
+
+def hamming_probe_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    hash_col: str,
+    n_bands: int,
+    max_hamming: int,
+) -> DataFrame:
+    """Distinct (``l_id``, ``r_id``, ``dist``) for every ``left`` row and
+    ``right`` row within Hamming ``max_hamming`` — the probe join of one
+    (``id``, ``hash_col``) frame against another, used by
+    ``decontaminate_images`` and the image stream sink's new x history
+    leg.  Both sides are keyed by ``hamming_band_keys``, equi-joined on
+    ``bk`` and verified by ``bit_count``.  Callers pick the join
+    strategy: a ``F.broadcast`` hint on an input survives the key
+    projection and explode.  Raises ``ValueError`` unless
+    ``0 <= max_hamming < n_bands``."""
+    lk = hamming_band_keys(left, "id", hash_col, n_bands, max_hamming)
+    rk = hamming_band_keys(right, "id", hash_col, n_bands, max_hamming)
+    dist = F.bit_count(F.col("_lh").bitwiseXOR(F.col("_rh")))
+    return (
+        lk.select(F.col("id").alias("l_id"), F.col(hash_col).alias("_lh"), "bk")
+        .join(
+            rk.select(
+                F.col("id").alias("r_id"), F.col(hash_col).alias("_rh"), "bk"
+            ),
+            "bk",
+        )
+        .filter(dist <= F.lit(max_hamming))
+        .select("l_id", "r_id", dist.alias("dist"))
+        .distinct()
+    )
 
 
 def degree_cap_edges(
@@ -447,8 +469,11 @@ def _hamming_band_edges(
     tier-1 near-collisions have ~32-bit distance on an independent digest
     and die, so background edge volume goes from quadratic to ~zero while
     true duplicates (close in every pixel-derived digest) keep passing.
+
+    Raises ``ValueError`` unless ``0 <= max_hamming < n_bands``, before
+    the (id, hash) index is persisted.
     """
-    k = min(max_hamming, n_bands - 1)
+    check_hamming_radius(n_bands, max_hamming)
     v2_col, v2_k = verify2 if verify2 is not None else (None, None)
 
     # r7 plan: HASH-VALUE pair discovery, then an id join-back.
@@ -487,7 +512,7 @@ def _hamming_band_edges(
     idx = df.select(*proj_cols).persist(StorageLevel.MEMORY_AND_DISK)
 
     bands = hamming_band_keys(
-        idx, "id", hash_col, n_bands, max_hamming, split_band_key=False
+        idx, "id", hash_col, n_bands, max_hamming
     ).select("bk", hash_col)
     grouped = (
         bands.groupBy("bk")
@@ -510,7 +535,7 @@ def _hamming_band_edges(
         .withColumn(
             "dist", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
         )
-        .filter(F.col("dist") <= F.lit(k))
+        .filter(F.col("dist") <= F.lit(max_hamming))
         .select(
             F.least("ha", "hb").alias("ha"),
             F.greatest("ha", "hb").alias("hb"),

@@ -344,6 +344,19 @@ def tile_dup_pairs(
     hash collision only merges buckets, and the ``a.t == b.t`` candidate
     filter keeps the output exact.  A/B + two-core-count scaling:
     `scripts/probe_tile_scale.py`.
+
+    Verification stays IN the bucket (struct members, ``bit_count`` per
+    generated pair) on purpose.  The hash-value pair core of
+    ``_hamming_band_edges`` — buckets of bare hashes grouped by
+    ``(t, bk)``, then a join back on ``(t, hash)`` — was measured here:
+    identical output on 10 random tables (one with a bucket cap of 8)
+    and on the probe table at 50k images x 9 tiles (5,000 edges), but
+    about 2x slower at local[4]: 7.4-7.7 s against 3.5-4.9 s over 4
+    alternating reps, and 6.8-9.3 s against 3.5-7.1 s without
+    persisting the join-back index: here the join back costs more than
+    the narrower buckets save.
+
+    Raises ``ValueError`` unless ``0 <= max_hamming < n_bands``.
     """
     from pyspark.sql import functions as F
 
@@ -351,7 +364,6 @@ def tile_dup_pairs(
 
     if n_tiles < 1:
         raise ValueError(f"n_tiles must be >= 1, got {n_tiles}")
-    k = min(max_hamming, n_bands - 1)
     bands = hamming_band_keys(
         tiles_df.select(
             F.col(id_col).alias("id"),
@@ -359,7 +371,7 @@ def tile_dup_pairs(
             F.col(phash_col).alias("th"),
         ),
         "id", "th", n_bands=n_bands, max_hamming=max_hamming,
-        split_band_key=False, carry_cols=["t"],
+        carry_cols=["t"],
     )
     grouped = (
         bands.select(F.xxhash64("t", "bk").alias("tbk"), "id", "th", "t")
@@ -373,7 +385,8 @@ def tile_dup_pairs(
         .filter(F.col("a.id") < F.col("b.id"))
         .filter(F.col("a.t") == F.col("b.t"))
         .filter(
-            F.bit_count(F.col("a.th").bitwiseXOR(F.col("b.th"))) <= F.lit(k)
+            F.bit_count(F.col("a.th").bitwiseXOR(F.col("b.th")))
+            <= F.lit(max_hamming)
         )
         .select(
             F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"),
@@ -1088,22 +1101,25 @@ def decontaminate_images(
 
     Shape (mirrors the text tiers: the corpus NEVER shuffles):
 
-    1. Both sides decompose into Manku combination band keys
-       (`operators/dedup.py:hamming_band_keys`, the same fused single-
-       int64 keys as the self-join legs) — recall-complete by
-       pigeonhole at C(m, m-k), bit-exact verify after.
+    1. ``operators/dedup.py:hamming_probe_pairs`` — the probe join the
+       image stream sink also uses — keys both sides with the fused
+       Manku band keys of the self-join legs (recall-complete by
+       pigeonhole at C(m, m-k)), equi-joins them and verifies with an
+       exact ``bit_count``, distinct per (corpus, bench) pair (a near
+       pair matches through several combos).
     2. The benchmark side (small by construction: eval sets are 1e3-1e6
-       rows vs a 1e12 corpus) is explicitly ``broadcast()``; corpus band
-       keys are produced in-task from the stored hash column, so the
-       only rows that ever reach an Exchange are MATCHED candidates
-       (bounded by contamination volume), not the corpus.
-    3. Exact ``bit_count`` verify, distinct per (corpus, bench) pair
-       (a near pair matches through several combos), then per-corpus-id
-       hit stats broadcast back onto the full corpus grain.
+       rows vs a 1e12 corpus) carries a ``broadcast()`` hint, which
+       survives the key projection and explode; corpus band keys are
+       produced in-task from the stored hash column, so the only rows
+       that ever reach an Exchange are MATCHED candidates (bounded by
+       contamination volume), not the corpus.
+    3. Per-corpus-id hit stats broadcast back onto the full corpus grain.
 
     Returns ``corpus_df`` + ``n_bench_hits`` (distinct benchmark images
     within the radius), ``min_hamming`` (NULL for clean rows), and
-    ``contaminated`` (int 0/1).  Hashes must be non-null int64.
+    ``contaminated`` (int 0/1).  Hashes must be non-null int64.  Raises
+    ``ValueError`` unless ``0 <= max_hamming < n_bands``: a wider radius
+    would silently lose recall in a safety screen.
 
     The hash column is generic (like the streaming sink's): pass
     ``phash_col="cphash"`` with stored dihedral-canonical hashes
@@ -1112,42 +1128,20 @@ def decontaminate_images(
     """
     from pyspark.sql import functions as F2
 
-    from fuzzymatch_spark.operators.dedup import hamming_band_keys
+    from fuzzymatch_spark.operators.dedup import hamming_probe_pairs
 
-    if max_hamming < 0:
-        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
-    if max_hamming >= n_bands:
-        # hamming_band_keys silently clamps k to n_bands-1: a radius >=
-        # n_bands would MISS pairs whose differing bits touch every band
-        # while this docstring promises pigeonhole recall-completeness —
-        # refuse instead of silently losing recall in a safety screen
-        raise ValueError(
-            f"max_hamming ({max_hamming}) must be < n_bands ({n_bands}) "
-            "for recall-complete banding; raise n_bands instead"
-        )
-    # hamming_band_keys normalizes its id column to "id" in the output
-    bench_keys = hamming_band_keys(
-        bench_df.select(bench_id, phash_col),
-        bench_id, phash_col, n_bands, max_hamming, split_band_key=False,
-    ).select(
-        F2.col("id").alias("_bid"),
-        F2.col(phash_col).alias("_bhash"),
-        "bk",
-    )
-    corpus_keys = hamming_band_keys(
-        corpus_df.select(corpus_id, phash_col),
-        corpus_id, phash_col, n_bands, max_hamming, split_band_key=False,
-    ).select(F2.col("id").alias(corpus_id), phash_col, "bk")
-    dist = F2.bit_count(F2.col(phash_col).bitwiseXOR(F2.col("_bhash")))
     hits = (
-        corpus_keys.join(F2.broadcast(bench_keys), "bk")
-        .filter(dist <= F2.lit(max_hamming))
-        .select(corpus_id, "_bid", dist.alias("_d"))
-        .distinct()
-        .groupBy(corpus_id)
+        hamming_probe_pairs(
+            corpus_df.select(F2.col(corpus_id).alias("id"), phash_col),
+            F2.broadcast(
+                bench_df.select(F2.col(bench_id).alias("id"), phash_col)
+            ),
+            phash_col, n_bands, max_hamming,
+        )
+        .groupBy(F2.col("l_id").alias(corpus_id))
         .agg(
             F2.count(F2.lit(1)).cast("long").alias("n_bench_hits"),
-            F2.min("_d").cast("int").alias("min_hamming"),
+            F2.min("dist").cast("int").alias("min_hamming"),
         )
     )
     return (

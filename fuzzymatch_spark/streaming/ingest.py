@@ -470,12 +470,19 @@ def make_phash_dedup_sink(
     Per micro-batch of NEW rows carrying stored perceptual hashes:
 
       1. new x new — the Manku combination-key Hamming self-join
-      2. new x history — new rows' band keys equi-joined against the
-         COMMITTED phash partitions, re-keyed IN-TASK from the stored
-         hashes (28 integer shift/or ops per row; no band table persisted,
-         no shuffle on the history side beyond the join itself)
+         (``_hamming_band_edges``, with its mega-bucket cap)
+      2. new x history — ``operators/dedup.py:hamming_probe_pairs``, the
+         probe join ``decontaminate_images`` also uses: new rows' fused
+         band keys equi-joined against the COMMITTED phash partitions,
+         re-keyed IN-TASK from the stored hashes (28 integer shift/or ops
+         per row; no band table persisted, no shuffle on the history
+         side beyond the join itself)
       3. JVM ``bit_count`` verify on both legs
       4. write edges + phashes to ``<table>/batch=<id>``, then the marker
+
+    ``max_hamming`` and, with ``bench_df``, ``decon_max_hamming`` must
+    satisfy ``0 <= radius < n_bands``; a bad radius raises ``ValueError``
+    when the sink is built, before any batch commits.
 
     The hash column is generic: pass ``phash_col="cphash"`` (the stored
     dihedral-canonical pHash from ``make_canonical_phash_udf``) and the
@@ -498,22 +505,16 @@ def make_phash_dedup_sink(
 
     from fuzzymatch_spark.operators.dedup import (
         _hamming_band_edges,
-        hamming_band_keys,
+        check_hamming_radius,
+        hamming_probe_pairs,
     )
 
     ph_dir = os.path.join(work_dir, "phashes")
     edges_dir = os.path.join(work_dir, "edges")
     commits_dir = os.path.join(work_dir, "_commits")
-    k = min(max_hamming, n_bands - 1)
-    if bench_df is not None and decon_max_hamming >= n_bands:
-        # fail at sink CONSTRUCTION, not mid-stream: a screen radius >=
-        # n_bands silently loses recall (decontaminate_images raises the
-        # same error per batch, but the misconfiguration should surface
-        # before any batch is committed)
-        raise ValueError(
-            f"decon_max_hamming ({decon_max_hamming}) must be < n_bands "
-            f"({n_bands}) for a recall-complete benchmark screen"
-        )
+    check_hamming_radius(n_bands, max_hamming)
+    if bench_df is not None:
+        check_hamming_radius(n_bands, decon_max_hamming, "decon_max_hamming")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         new = batch_df.select(
@@ -554,23 +555,14 @@ def make_phash_dedup_sink(
             old = spark.read.parquet(
                 *[f"{ph_dir}/batch={b}" for b in history]
             ).select(F.col(id_col).alias("id"), F.col(phash_col).alias("ph"))
-            nb = hamming_band_keys(new, "id", "ph", n_bands, max_hamming)
-            ob = hamming_band_keys(old, "id", "ph", n_bands, max_hamming)
             cross = (
-                nb.alias("n")
-                .join(ob.alias("o"), on=["band", "key"])
-                .filter(F.col("n.id") != F.col("o.id"))
-                .filter(
-                    F.bit_count(
-                        F.col("n.ph").bitwiseXOR(F.col("o.ph"))
-                    ) <= F.lit(k)
+                hamming_probe_pairs(new, old, "ph", n_bands, max_hamming)
+                .filter("l_id != r_id")
+                .selectExpr(
+                    "least(l_id, r_id) AS a_id",
+                    "greatest(l_id, r_id) AS b_id",
+                    "'phash' AS source",
                 )
-                .select(
-                    F.least("n.id", "o.id").alias("a_id"),
-                    F.greatest("n.id", "o.id").alias("b_id"),
-                )
-                .dropDuplicates(["a_id", "b_id"])
-                .withColumn("source", F.lit("phash"))
             )
             cand = cand.unionByName(cross).dropDuplicates(["a_id", "b_id"])
 

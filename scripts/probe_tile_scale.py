@@ -5,8 +5,8 @@ tile hashes, no decode — the probe measures the JOIN, which is the part
 that scales with corpus size; decode cost is per-image and
 embarrassingly parallel).  10% planted twins share 6/9 positions
 (matched_frac 0.666667 >= 0.6); the remaining hashes are uniform random
-64-bit, so same-position Hamming<=4 background is ~0 by the birthday
-bound (C(N,2) * 679k/2^64 per position) — unlike the WHOLE-image pHash
+64-bit, so same-position Hamming<=3 background is ~0 by the birthday
+bound (C(N,2) * 43.7k/2^64 per position) — unlike the WHOLE-image pHash
 leg, whose structured-DCT hashes measurably collide (BENCH.md x7.1 row),
 positional tile keys keep edge volume linear in the planted dup mass.
 
@@ -66,7 +66,7 @@ def run(master: str, cores: int):
     t0 = time.time()
     out = tile_dup_pairs(
         tiles, n_tiles=9, id_col="image_id", tile_col="tile_idx",
-        phash_col="tile_phash", max_hamming=4, min_frac=0.6,
+        phash_col="tile_phash", max_hamming=3, min_frac=0.6,
     )
     edges = out.count()
     wall = time.time() - t0

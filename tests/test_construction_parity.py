@@ -28,8 +28,7 @@ def _column_form_band_keys(df, id_col, hash_col, n_bands, max_hamming):
     """The pre-r7 Column-built combo keys (fused form), kept as the
     executable specification of ``hamming_band_keys``."""
     m = n_bands
-    k = min(max_hamming, m - 1)
-    c = m - k
+    c = m - max_hamming
     width = 64 // m
     mask = (1 << width) - 1
 
@@ -59,9 +58,7 @@ def test_band_keys_match_column_form(spark, n_bands, max_hamming):
     rows = [(f"id{i}", (i * 0x9E3779B97F4A7C15) % (1 << 63) - (1 << 62))
             for i in range(64)]
     df = spark.createDataFrame(rows, "image_id string, phash long")
-    new = hamming_band_keys(
-        df, "image_id", "phash", n_bands, max_hamming, split_band_key=False
-    )
+    new = hamming_band_keys(df, "image_id", "phash", n_bands, max_hamming)
     ref = _column_form_band_keys(df, "image_id", "phash", n_bands, max_hamming)
     assert new.schema == ref.schema
     assert new.exceptAll(ref).count() == 0

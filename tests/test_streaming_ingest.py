@@ -190,8 +190,9 @@ def test_dedup_sink_crash_before_commit(spark, tmp_path):
 def test_incremental_phash_dedup_cross_batch(spark, tmp_path):
     """Image-side incremental dedup: a near-dup pHash landing in a LATER
     micro-batch pairs against the committed history (re-keyed in-task),
-    replay is idempotent, and the edge set equals the batch self-join's
-    over the full corpus."""
+    at the radius itself but not one bit past it, replay is idempotent,
+    and the edge set equals the batch self-join's over the full
+    corpus."""
     from pyspark.sql import functions as F
 
     from fuzzymatch_spark.operators.dedup import _hamming_band_edges
@@ -206,6 +207,8 @@ def test_incremental_phash_dedup_cross_batch(spark, tmp_path):
     b1 = [("i1", 0), ("i2", base), ("i3", 0x0F0F0F0F0F0F0F0F)]
     # i4 = 3-bit-flip twin of i1 (cross-batch); i6 = exact dup of i2
     b2 = [("i4", 0b10000000101), ("i5", 0x00FF00FF00FF00FF), ("i6", base)]
+    # i7 = Hamming 6 (at radius) from i3; i8 = Hamming 7 from i5
+    b3 = [("i7", 0x0F0F0F0F0F0F0F0F ^ 0x3F), ("i8", 0x00FF00FF00FF00FF ^ 0x7F)]
 
     inp = str(tmp_path / "landing")
     work = str(tmp_path / "phwork")
@@ -214,14 +217,16 @@ def test_incremental_phash_dedup_cross_batch(spark, tmp_path):
     incremental_phash_dedup(spark, inp, pschema, work, ckpt)
     spark.createDataFrame(b2, pschema).coalesce(1).write.mode("append").parquet(inp)
     incremental_phash_dedup(spark, inp, pschema, work, ckpt)
+    spark.createDataFrame(b3, pschema).coalesce(1).write.mode("append").parquet(inp)
+    incremental_phash_dedup(spark, inp, pschema, work, ckpt)
 
-    assert committed_batches(spark, f"{work}/_commits") == [0, 1]
+    assert committed_batches(spark, f"{work}/_commits") == [0, 1, 2]
     edges = spark.read.parquet(f"{work}/edges")
     got = {(r["a_id"], r["b_id"]) for r in edges.collect()}
-    assert got == {("i1", "i4"), ("i2", "i6")}, got
+    assert got == {("i1", "i4"), ("i2", "i6"), ("i3", "i7")}, got
 
     # parity with the batch self-join over the full corpus
-    full = spark.createDataFrame(b1 + b2, pschema)
+    full = spark.createDataFrame(b1 + b2 + b3, pschema)
     want = {
         (r["a_id"], r["b_id"])
         for r in _hamming_band_edges(
@@ -232,7 +237,7 @@ def test_incremental_phash_dedup_cross_batch(spark, tmp_path):
 
     # replay idempotency: re-invoke the sink under the last batch id
     sink = make_phash_dedup_sink(spark, work)
-    sink(spark.createDataFrame(b2, pschema), 1)
+    sink(spark.createDataFrame(b3, pschema), 2)
     again = {(r["a_id"], r["b_id"])
              for r in spark.read.parquet(f"{work}/edges").collect()}
     assert again == got

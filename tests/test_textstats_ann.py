@@ -443,11 +443,11 @@ def test_pq_adc_zero_norm_guard(spark):
     assert abs(out[1] - 1.0) < 1e-9
 
 
-def test_decontaminate_embeddings_broadcast_and_ivf(spark):
+def test_decontaminate_embeddings_broadcast_and_blas(spark):
     """Embedding-tier decontamination: perturbed copies of two corpus
     vectors in the benchmark flag exactly those rows (broadcast method,
-    corpus never shuffles — BroadcastNestedLoopJoin plan); the IVF scale
-    path recovers the same flags on this corpus; invalid method raises."""
+    corpus never shuffles — BroadcastNestedLoopJoin plan); the GEMM path
+    matches it; the removed "ivf" method and unknown methods raise."""
     import numpy as np
 
     from fuzzymatch_spark.operators.ann import decontaminate_embeddings
@@ -484,13 +484,6 @@ def test_decontaminate_embeddings_broadcast_and_ivf(spark):
     assert rows[3]["n_bench_hits"] == 1 and rows[3]["max_cos"] >= 0.95
     assert rows[5]["max_cos"] is None and rows[5]["n_bench_hits"] == 0
 
-    ivf = decontaminate_embeddings(
-        corpus, bench, min_cosine=0.95, method="ivf", n_centroids=2
-    )
-    assert {i for i, r in
-            {r["vec_id"]: r for r in ivf.collect()}.items()
-            if r["contaminated"] == 1} == {3, 7}
-
     # GEMM scale path: flags AND stats match the broadcast oracle path
     blas = {r["vec_id"]: r for r in decontaminate_embeddings(
         corpus, bench, min_cosine=0.95, method="blas").collect()}
@@ -508,6 +501,8 @@ def test_decontaminate_embeddings_broadcast_and_ivf(spark):
 
     with pytest.raises(ValueError, match="method"):
         decontaminate_embeddings(corpus, bench, method="lsh")
+    with pytest.raises(ValueError, match="'ivf'"):
+        decontaminate_embeddings(corpus, bench, method="ivf")
 
 
 def test_decontaminate_embeddings_sharded_matches_unsharded(spark):
