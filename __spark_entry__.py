@@ -555,9 +555,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # embedding tier (r6 widening, same slot): each src0 doc's
         # vector, perturbed +0.02/element (cos ~0.987 vs its own corpus
         # vector only — the cosine_dup_pairs planting convention), forms
-        # the benchmark; decontaminate_embeddings' broadcast screen must
-        # flag exactly the src0 rows.  Oracle: brute-force per-element
-        # cosine, round(…, 4) both engines.
+        # the benchmark; decontaminate_embeddings' GEMM screen must flag
+        # exactly the src0 rows.  Oracle: brute-force per-element cosine,
+        # round(…, 4) both engines.
         from fuzzymatch_spark.operators.ann import decontaminate_embeddings
 
         emb = _emb(spark, sf).select(

@@ -33,7 +33,7 @@ which made the first ``survivor_payload_filter`` shape 20x slower than
 the payload anti-join it replaces and flat from 8 to 32 cores
 (driver-bound).  A ``bytes`` literal is a single plan node:
 construction 0.04 s, action overhead unmeasurable
-(`scripts/probe_payload_emit.py`, BENCH.md).
+(BENCH.md, survivor-payload emit A/B).
 
 Negative A/B, recorded so it isn't retried: rebuilding the word array
 probe-side as ``from_json`` of one json string literal DOES

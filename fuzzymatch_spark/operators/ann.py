@@ -629,11 +629,9 @@ def kmeans_lloyd(
 def decontaminate_embeddings(
     corpus_df: DataFrame,
     bench_df: DataFrame,
-    corpus_id: str = "vec_id",
     bench_id: str = "bench_id",
     vec_col: str = "embedding",
     min_cosine: float = 0.95,
-    method: str = "broadcast",
 ) -> DataFrame:
     """Embedding-space decontamination: flag every corpus row whose
     vector is within ``min_cosine`` of ANY benchmark/eval vector — the
@@ -641,75 +639,34 @@ def decontaminate_embeddings(
     that survive the exact n-gram, fuzzy-shingle, and pHash screens
     (paraphrases, re-crops, style transfers).
 
-    Two methods, identical output columns:
+    One exact screen (``make_embedding_screen``): one numpy GEMM per
+    Arrow batch against the L2-normalized benchmark matrix shipped in
+    the UDF closure.  No joins, no exchange — the corpus never shuffles.
+    Closure memory bounds |bench| at ~1e5-1e6 vectors (dim-64 doubles:
+    51 MB at 1e5); beyond that, ``decontaminate_embeddings_sharded``
+    runs the GEMM per benchmark shard and combines the flags.
 
-    * ``"broadcast"`` (exact, the ORACLE path): the benchmark side —
-      small by construction — broadcasts through a
-      BroadcastNestedLoopJoin; each corpus row evaluates |bench|
-      cosines via higher-order-function expressions and the corpus
-      itself NEVER shuffles (the text/image tiers' contract).
-      Measured ~30 us per cosine pair (HOF lambdas are interpreted per
-      element, not codegen'd) — fine for oracle-scale data, 100x too
-      slow for production (the 200k x 1k probe below).
-    * ``"blas"`` (exact, the SCALE path): one numpy GEMM per Arrow
-      batch against the L2-normalized benchmark matrix shipped in the
-      UDF closure (the `ivf_assign` pattern; the O(|bench| x dim)
-      driver collect mirrors the codebook collects).  Corpus vectors
-      must be NON-NULL and FIXED-DIMENSION: a batch containing None or
-      ragged arrays fails the ``np.array`` stack mid-job, whereas
-      "broadcast" silently treats such rows as unflagged (HOF cosine ->
-      NULL) — screen malformed rows out before this method.  Identical
-      flags to "broadcast" on clean data — measured 191 s -> 0.87 s on
-      200k x 1k x dim-64
-      (~220x, same 45,674 flags) — with one caveat: numpy rounds
-      half-even where the JVM rounds half-up, so a cosine EXACTLY at
-      the 4th-decimal midpoint of the threshold can flag differently
-      (measure-zero on real embeddings).  No joins at all: one in-task
-      projection.  Closure memory bounds |bench| at ~1e5-1e6 vectors
-      (dim-64 doubles: 51 MB at 1e5); beyond that,
-      ``decontaminate_embeddings_sharded`` runs the GEMM per benchmark
-      shard and combines the flags.
-
-    An ``"ivf"`` method (benchmark-fit centroids, same-cell cosines) was
-    removed: it measured 27 s against 0.87 s for ``"blas"`` at 1k bench
-    vectors, since its per-candidate cosine is an interpreted
-    higher-order-function expression.  Passing it raises ``ValueError``.
+    Measured losers, removed (200k corpus x 1k bench x dim-64,
+    local[32]; BENCH.md embedding-decon row): a BroadcastNestedLoopJoin
+    with interpreted ``zip_with``/``aggregate`` cosines took 191 s
+    against 0.87 s for the GEMM, with the same 45,674 flags; an IVF
+    variant (benchmark-fit centroids, same-cell cosines) took 27 s.
+    The GEMM replaced the join form in the ``decontamination_suite``
+    oracle row after collected rows compared equal on unrounded doubles
+    at sf0.001/0.01/0.1.
 
     Cosine is rounded to 4 decimals BEFORE thresholding so the
     predicate is reproducible cross-engine (`cosine_dup_pairs`
-    convention).  Returns ``corpus_df`` + ``n_bench_hits``,
-    ``max_cos`` (NULL for clean rows), ``contaminated`` (int 0/1).
+    convention).  numpy rounds half-even where the JVM and DuckDB round
+    half-up, so a cosine EXACTLY at a 4th-decimal midpoint can flag
+    differently (measure-zero on real embeddings).  Returns
+    ``corpus_df`` + ``n_bench_hits``, ``max_cos`` (NULL for clean
+    rows), ``contaminated`` (int 0/1); a NULL corpus vector is clean.
+    A corpus vector whose length differs from the benchmark's fails the
+    job with a ``ValueError`` naming both lengths.
     """
-    if method == "blas":
-        return _decontaminate_embeddings_blas(
-            corpus_df, bench_df, bench_id, vec_col, min_cosine
-        )
-    if method != "broadcast":
-        raise ValueError(
-            f"method must be 'broadcast' or 'blas': {method!r} (the 'ivf' "
-            "method was removed as slower than 'blas')"
-        )
-    bench = bench_df.select(
-        F.col(bench_id).alias("_bid"), F.col(vec_col).alias("_bvec")
-    )
-    corpus = corpus_df.select(corpus_id, vec_col)
-    cos = F.round(_safe_cos(F.col(vec_col), F.col("_bvec")), 4)
-    hits = (
-        corpus.crossJoin(F.broadcast(bench))
-        .withColumn("_cos", cos)
-        .filter(F.col("_cos") >= F.lit(min_cosine))
-        .groupBy(corpus_id)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bench_hits"),
-            F.max("_cos").alias("max_cos"),
-        )
-    )
-    return (
-        corpus_df.join(F.broadcast(hits), corpus_id, "left")
-        .withColumn(
-            "n_bench_hits", F.coalesce("n_bench_hits", F.lit(0).cast("long"))
-        )
-        .withColumn("contaminated", (F.col("n_bench_hits") > 0).cast("int"))
+    return make_embedding_screen(bench_df, bench_id, vec_col, min_cosine)(
+        corpus_df
     )
 
 
@@ -723,17 +680,21 @@ def make_embedding_screen(
     matrix and compile the pandas_udf closure — and return a reusable
     ``apply(corpus_df) -> DataFrame``.
 
-    This is the amortized form of
-    ``decontaminate_embeddings(method='blas')`` for repeated callers: the
-    streaming sink used to pay the driver collect + closure broadcast on
-    EVERY micro-batch (the per-batch overhead recorded in f8ed735); built
-    at sink-construction time the per-batch cost is the GEMM alone (the
-    ``bench_sig`` pattern the fuzzy tier already used).  Output is
-    identical to the one-shot path, which now delegates here."""
+    This is the amortized form of ``decontaminate_embeddings`` for
+    repeated callers: the streaming sink used to pay the driver collect +
+    closure broadcast on EVERY micro-batch (the per-batch overhead
+    recorded in f8ed735); built at sink-construction time the per-batch
+    cost is the GEMM alone (the ``bench_sig`` pattern the fuzzy tier
+    already used).  Output is identical to the one-shot path, which
+    delegates here."""
     import pandas as pd
     from pyspark.sql import types as T
 
-    rows = bench_df.select(bench_id, vec_col).collect()
+    rows = (
+        bench_df.select(bench_id, vec_col)
+        .where(F.col(vec_col).isNotNull())
+        .collect()
+    )
     if not rows:
         def apply_empty(corpus_df: DataFrame) -> DataFrame:
             return (
@@ -749,6 +710,7 @@ def make_embedding_screen(
     bnorm = np.linalg.norm(bmat, axis=1)
     bnorm[bnorm == 0] = 1.0  # zero bench vector: cos := 0 convention
     bmat = bmat / bnorm[:, None]
+    dim = bmat.shape[1]
     thr = float(min_cosine)
 
     out_type = T.StructType([
@@ -758,15 +720,26 @@ def make_embedding_screen(
 
     @F.pandas_udf(out_type)
     def screen(vs: pd.Series) -> pd.DataFrame:
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in vs])
-        if mat.size == 0:
-            return pd.DataFrame({"n_bench_hits": [], "max_cos": []})
-        rn = np.linalg.norm(mat, axis=1)
-        rn[rn == 0] = 1.0
-        cos = np.round((mat / rn[:, None]) @ bmat.T, 4)
-        hit = cos >= thr
-        n = hit.sum(axis=1).astype("int64")
-        mx = np.max(np.where(hit, cos, -np.inf), axis=1)
+        # NULL vectors stay unflagged; stacking them with real rows
+        # would fail the whole batch
+        live = vs.notna().to_numpy()
+        n = np.zeros(len(vs), dtype="int64")
+        mx = np.full(len(vs), np.nan)
+        vecs = [np.asarray(v, dtype=np.float64) for v in vs[live]]
+        for v in vecs:
+            if v.shape != (dim,):
+                raise ValueError(
+                    f"embedding screen: a corpus vector has {v.size} "
+                    f"elements, the benchmark vectors have {dim}"
+                )
+        if vecs:
+            mat = np.stack(vecs)
+            rn = np.linalg.norm(mat, axis=1)
+            rn[rn == 0] = 1.0
+            cos = np.round((mat / rn[:, None]) @ bmat.T, 4)
+            hit = cos >= thr
+            n[live] = hit.sum(axis=1)
+            mx[live] = np.max(np.where(hit, cos, -np.inf), axis=1)
         return pd.DataFrame({
             "n_bench_hits": n,
             "max_cos": np.where(n > 0, mx, np.nan),
@@ -790,23 +763,6 @@ def make_embedding_screen(
     return apply
 
 
-def _decontaminate_embeddings_blas(
-    corpus_df: DataFrame,
-    bench_df: DataFrame,
-    bench_id: str,
-    vec_col: str,
-    min_cosine: float,
-) -> DataFrame:
-    """The GEMM screen behind ``decontaminate_embeddings(method="blas")``:
-    the benchmark matrix (normalized driver-side, O(|bench| x dim) like
-    the IVF codebook collects) rides the pandas_udf closure; each Arrow
-    batch of corpus vectors is one ``rows @ bench.T`` matmul.  Zero
-    joins, zero shuffles — the screen is a per-row projection."""
-    return make_embedding_screen(bench_df, bench_id, vec_col, min_cosine)(
-        corpus_df
-    )
-
-
 def decontaminate_embeddings_sharded(
     corpus_df: DataFrame,
     bench_df: DataFrame,
@@ -816,7 +772,7 @@ def decontaminate_embeddings_sharded(
     vec_col: str = "embedding",
     min_cosine: float = 0.95,
 ) -> DataFrame:
-    """`decontaminate_embeddings(method="blas")` for benchmark sets that
+    """`decontaminate_embeddings` for benchmark sets that
     outgrow the UDF closure (~1e5-1e6 vectors at dim-64 doubles): split
     the BENCHMARK into ``n_shards`` hash shards, run the GEMM screen per
     shard, and combine the flags — hits add, max cosine maxes, a row is
@@ -839,11 +795,9 @@ def decontaminate_embeddings_sharded(
             decontaminate_embeddings(
                 corpus_df.select(corpus_id, vec_col),
                 bench_df.where(shard == s),
-                corpus_id=corpus_id,
                 bench_id=bench_id,
                 vec_col=vec_col,
                 min_cosine=min_cosine,
-                method="blas",
             )
             .filter(F.col("contaminated") == 1)
             .select(corpus_id, "n_bench_hits", "max_cos")

@@ -407,7 +407,10 @@ def degree_cap_edges(
     It does NOT bind on DIFFUSE background growth (measured: 782,033 of
     782,048 edges survive cap=8 at 1.6M images, because mean degree is
     ~1) — that regime is handled by the independent-digest tier-2 verify
-    (``phash_verify_max_hamming``), and the two compose.
+    (``phash_verify_max_hamming``), and the two compose.  Measured from
+    400k to 1.6M images at radius 6: uncapped 109,762 -> 782,048 edges
+    (x7.12), tier-2 at k2=8 80,584 -> 328,810 (x4.08), planted-twin
+    recall 1.0 in every variant.
 
     Cost: one window sort over the DIRECTED edge list partitioned by node
     (2·E rows — edge-set scale, far below corpus scale); survivors are

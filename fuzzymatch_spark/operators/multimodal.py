@@ -342,8 +342,10 @@ def tile_dup_pairs(
     (position, band-key) pair is folded into ONE xxhash64 group column —
     the fused-key lesson from the MinHash exchange; a cross-position
     hash collision only merges buckets, and the ``a.t == b.t`` candidate
-    filter keeps the output exact.  A/B + two-core-count scaling:
-    `scripts/probe_tile_scale.py`.
+    filter keeps the output exact.  Measured on 165k images x 9 tiles
+    with 10% planted 6-of-9 twins: m=8 with the two-column (t, bk) key
+    took 127.7 s / 75.9 s at local[8] / local[32], m=4 (radius 3) with
+    the fused key 10.8 s / 3.6 s, both 15,000 edges at recall 1.0.
 
     Verification stays IN the bucket (struct members, ``bit_count`` per
     generated pair) on purpose.  The hash-value pair core of
@@ -627,6 +629,11 @@ def image_dedup_edges(
     consumed at the scan and never shuffle.  A pair found by several
     legs appears once per source — source multiplicity is evidence the
     caller may weigh, so it is not collapsed here.
+
+    Measured on 110k synthesized PNG/JPEG images with 10% planted twins
+    across the three classes: 220.1 s / 113.5 s at local[8] / local[32],
+    recall 1.0 on every class.  Digesting dominates; the three joins sit
+    near their fixed-cost floors.
     """
     from pyspark.sql import functions as F
 
@@ -918,6 +925,12 @@ def bucket_batches(
     per-worker distributed loader would, and a 17-bucket ladder never
     collapses 10^12 rows into 17 global sorts.  Size ``n_shards`` to
     your executor count, not to the corpus.
+
+    Measured over 40M metadata rows read from parquet (gate, buckets,
+    then these batches): 27.5 s at local[8], 10.2 s at local[32], 0.93
+    of the host's parallel ceiling.  Time such stages over a stored
+    table: input synthesized inline with ``spark.range`` +
+    ``format_string`` measured string allocation, not the operators.
     """
     from pyspark.sql import functions as F2
     from pyspark.sql.window import Window
@@ -1035,7 +1048,7 @@ def survivor_payload_filter(
     shards re-bound each pass's filter — rather than falling back to
     the payload shuffle.
 
-    Measured crossover (``scripts/probe_payload_emit.py``, BENCH.md):
+    Measured crossover (BENCH.md; noop sink, broadcast joins disabled):
     with a 25% drop rate over 2M rows the plain anti-join WINS at 512 B
     bodies (~1 GB exchange, 2.2 s vs 4.2 s — the Bloom path is bound by
     its two fixed ids-only jobs) and LOSES at 4 KiB bodies (~8 GB

@@ -174,14 +174,13 @@ def repeated_substring_stats(
     stride-1 positions (the denominator semantics don't depend on k).
 
     Cost note: the relational form pays one md5 per character position
-    before sampling.  Measured (BENCH.md) this is the FASTEST tested
-    hashing stage — JVM md5 in codegen beats and then ties the
-    vectorized Karp-Rabin mapInPandas variant
-    (``repeated_substring_stats_rolling``) up through 30 KB documents;
-    the variant remains for multi-MB docs and non-md5 key families, and
-    a true distributed suffix array is the full Lee-et-al. span-removal
-    path.  The downstream dup-marking + coverage plan is shared either
-    way (``_coverage_from_keyed``).
+    before sampling, and it is the fastest hashing stage measured.  A
+    vectorized double-modulus Karp-Rabin stage inside ``mapInPandas``
+    (equal output at k=1) lost at caption scale, 3.07 s against 0.57 s
+    (sf0.1, k=4, L=32, local[32]; the Arrow round trip dominates), and
+    tied on 30 KB documents (0.65 s against 0.66 s over 9.6M windows),
+    so it was removed.  A true distributed suffix array is the full
+    Lee-et-al. span-removal path.
     """
     from pyspark.sql import Window
 
@@ -221,16 +220,6 @@ def repeated_substring_stats(
         n_chars.cast("long").alias("n_chars"),
         n_pos.cast("long").alias("n_windows"),
     )
-    return _coverage_from_keyed(keyed, base, L)
-
-
-def _coverage_from_keyed(keyed: DataFrame, base: DataFrame, L: int) -> DataFrame:
-    """Shared downstream plan for substring-coverage variants: dup
-    marking (count over the window key) + per-doc lead()-window interval
-    union + full-grain left join — identical whichever hashing stage
-    produced the (_rs_id, pos, wkey) rows."""
-    from pyspark.sql import Window
-
     dup_pos = (
         keyed.withColumn(
             "n_occ", F.count("*").over(Window.partitionBy("wkey"))
@@ -269,105 +258,3 @@ def _coverage_from_keyed(keyed: DataFrame, base: DataFrame, L: int) -> DataFrame
         )
     )
 
-
-def repeated_substring_stats_rolling(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window_len: int = 32,
-    sample_mod: int = 1,
-) -> DataFrame:
-    """Alternative hashing stage for ``repeated_substring_stats``:
-    double Karp-Rabin polynomial hashes computed VECTORIZED inside
-    ``mapInPandas`` — Horner's rule as 2 x ``window_len`` whole-batch
-    numpy multiply-accumulate passes (int64, mod 31-bit primes each
-    step so products never overflow).  Sampling (combined key % k == 0)
-    drops rows before they leave the task, so only surviving
-    (id, pos, key) rows reach the exchange.
-
-    Measured A/B vs the relational md5 stage (local[32], k=4, L=32):
-    caption-scale docs (sf0.1, ~500 B) relational 0.57 s vs rolling
-    3.07 s (Arrow round-trip dominates); 30 KB docs (9.6M windows)
-    0.66 s vs 0.65 s — a tie.  JVM md5 in codegen is simply
-    competitive: keep the RELATIONAL operator as the default at every
-    tested scale; this variant exists for multi-MB documents (book/code
-    files), where per-window md5 cost grows with document count x
-    length while the numpy passes stay memory-bandwidth-bound, and as
-    the non-md5 key path when a deployment needs a keyed-hash family.
-
-    Keys are 62-bit double-modulus polynomial values, not md5 — so this
-    variant is rows-only (no DuckDB oracle; the engine's oracle-portable
-    hash rule reserves md5 for checked paths).  Its OUTPUT STATISTICS at
-    any k are pinned by test to the relational operator's on planted
-    data at k=1 (both detect exactly the equal-window pairs; the
-    polynomial double-hash collision rate ~2^-62 is negligible), and the
-    downstream plan is literally shared (``_coverage_from_keyed``).
-
-    Caveats vs the relational variant: windows/positions are UTF-8
-    BYTES here (numpy operates on the encoded buffer) vs CHARACTERS
-    there — identical on ASCII corpora, shifted on multibyte text; and
-    the id column must be integral (the Arrow schema pins ``long``).
-    """
-    import pandas as pd
-
-    L, K = int(window_len), int(sample_mod)
-    if L < 2 or K < 1:
-        raise ValueError(
-            "repeated_substring_stats_rolling: need window_len >= 2, "
-            "sample_mod >= 1"
-        )
-    M1, M2 = 2147483647, 2147483629  # two Mersenne-ish 31-bit primes
-    B1, B2 = 257, 263
-
-    def go(batches):
-        import numpy as np
-
-        for pdf in batches:
-            ids, poss, keys = [], [], []
-            for rid, txt in zip(pdf["_rs_id"], pdf["_t"]):
-                data = np.frombuffer(
-                    (txt or "").encode("utf-8", "surrogatepass"), np.uint8
-                ).astype(np.int64)
-                n = data.shape[0] - L + 1
-                if n <= 0:
-                    continue
-                h1 = np.zeros(n, np.int64)
-                h2 = np.zeros(n, np.int64)
-                for j in range(L):  # Horner, vectorized across positions
-                    c = data[j:j + n]
-                    h1 = (h1 * B1 + c) % M1
-                    h2 = (h2 * B2 + c) % M2
-                key = h1 * M2 + h2  # < 2^62, collision-free per (h1,h2)
-                if K > 1:
-                    keep = (key % K) == 0
-                    pos = np.nonzero(keep)[0] + 1
-                    key = key[keep]
-                else:
-                    pos = np.arange(1, n + 1)
-                ids.extend([rid] * pos.shape[0])
-                poss.append(pos)
-                keys.append(key)
-            if ids:
-                yield pd.DataFrame({
-                    "_rs_id": np.asarray(ids),
-                    "pos": np.concatenate(poss).astype(np.int32),
-                    "wkey": np.concatenate(keys),
-                })
-            else:
-                yield pd.DataFrame({
-                    "_rs_id": pd.Series([], dtype="int64"),
-                    "pos": pd.Series([], dtype="int32"),
-                    "wkey": pd.Series([], dtype="int64"),
-                })
-
-    n_chars = F.length(F.col(text_col))
-    n_pos = F.when(n_chars >= L, n_chars - L + 1).otherwise(F.lit(0))
-    keyed = df.select(
-        F.col(id_col).alias("_rs_id"), F.col(text_col).alias("_t")
-    ).mapInPandas(go, "_rs_id long, pos int, wkey long")
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        n_chars.cast("long").alias("n_chars"),
-        n_pos.cast("long").alias("n_windows"),
-    )
-    return _coverage_from_keyed(keyed, base, L)

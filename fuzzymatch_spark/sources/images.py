@@ -369,8 +369,9 @@ def make_image_digests_udf(grid: int = 3):
     fast path) and emits all four digests; only ~ (3 + grid²) longs per
     image ever leave the scan.  Measured: 1.48x over the three separate
     UDF passes (min-of-3, 20k mixed png/jpeg rows, local[8]: 9.68 ->
-    6.54 s) — less than the decode multiple alone because the canonical
-    hash's 8 DCT passes are a real share of the per-image cost.
+    6.54 s; a noisier window drew 1.20x) — less than the decode multiple
+    alone because the canonical hash's 8 DCT passes are a real share of
+    the per-image cost.
     """
     from pyspark.sql.types import (
         ArrayType,

@@ -67,8 +67,8 @@ def curate(
     ``emb_id_col`` = the doc id) is within ``emb_min_cosine`` of any
     benchmark embedding are dropped — paraphrased eval leaks that both
     the exact n-gram and fuzzy-shingle tiers miss.  Runs the GEMM
-    (``method='blas'``) screen of ``decontaminate_embeddings``: one
-    matmul per Arrow batch, no joins, corpus never shuffles.
+    screen of ``decontaminate_embeddings``: one matmul per Arrow batch,
+    no joins, corpus never shuffles.
     """
     if (per_stratum_cap is None) != (not strata_cols):
         raise ValueError(
@@ -131,10 +131,8 @@ def curate(
             decontaminate_embeddings(
                 embeddings_df,
                 bench_embeddings_df,
-                corpus_id=emb_id_col,
                 vec_col=emb_vec_col,
                 min_cosine=emb_min_cosine,
-                method="blas",
             )
             .filter(F.col("contaminated") == 1)
             .select(F.col(emb_id_col).alias(id_col))

@@ -326,42 +326,6 @@ def test_normalize_urls_colon_authorities(spark):
     assert out[5]["url_norm"].endswith(":8443/z")
 
 
-def test_repeated_substring_rolling_matches_relational_exact(spark):
-    import string
-
-    from fuzzymatch_spark.operators.suffix import (
-        repeated_substring_stats,
-        repeated_substring_stats_rolling,
-    )
-
-    run = (string.ascii_lowercase + string.digits)[:30]
-    docs = spark.createDataFrame([
-        (1, "!@#$" + run + "%^&*"),
-        (2, run + "~~~~"),
-        (3, "no duplicates in here at all x"),
-        (4, "AB"),  # shorter than L
-    ], "doc_id long, text string")
-
-    def snap(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    rel = snap(repeated_substring_stats(
-        docs, "doc_id", "text", window_len=8, sample_mod=1))
-    rol = snap(repeated_substring_stats_rolling(
-        docs, "doc_id", "text", window_len=8, sample_mod=1))
-    assert rel == rol  # identical stats: both detect equal windows
-
-    # content-defined sampling in the rolling variant is alignment-free
-    # and a lower bound of exact coverage
-    rol4 = {r["doc_id"]: r for r in repeated_substring_stats_rolling(
-        docs, "doc_id", "text", window_len=8, sample_mod=3).collect()}
-    rel1 = {r["doc_id"]: r for r in repeated_substring_stats(
-        docs, "doc_id", "text", window_len=8, sample_mod=1).collect()}
-    for d in (1, 2):
-        assert rol4[d]["dup_span_chars"] <= rel1[d]["dup_span_chars"]
-    assert rol4[1]["n_dup_windows"] == rol4[2]["n_dup_windows"]
-
-
 def test_pq_encode_and_adc_match_numpy(spark):
     """Product quantization: codes equal the brute-force numpy assignment,
     codewords encode to themselves, and the ADC top-k ranking equals the
@@ -443,66 +407,112 @@ def test_pq_adc_zero_norm_guard(spark):
     assert abs(out[1] - 1.0) < 1e-9
 
 
-def test_decontaminate_embeddings_broadcast_and_blas(spark):
+def test_decontaminate_embeddings_gemm(spark):
     """Embedding-tier decontamination: perturbed copies of two corpus
-    vectors in the benchmark flag exactly those rows (broadcast method,
-    corpus never shuffles — BroadcastNestedLoopJoin plan); the GEMM path
-    matches it; the removed "ivf" method and unknown methods raise."""
-    import numpy as np
-
+    vectors in the benchmark flag exactly those rows, with hits and max
+    cosine equal to a numpy brute force; the screen is a projection (no
+    join, no exchange); a zero vector and an empty benchmark flag
+    nothing."""
     from fuzzymatch_spark.operators.ann import decontaminate_embeddings
 
     rng = np.random.RandomState(7)
     vecs = rng.randn(60, 16).astype(np.float64)
+    bvecs = [vecs[3] + 0.02, vecs[7] + 0.02, rng.randn(16)]  # ev_far: none
+    # a zero vector (empty-doc embedding) must not abort the screen:
+    # cos := 0 to everything (the kmeans convention)
+    cvecs = {i: vecs[i] for i in range(60)}
+    cvecs[999] = np.zeros(16)
     corpus = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(60)],
+        [(i, [float(x) for x in v]) for i, v in cvecs.items()],
         "vec_id long, embedding array<double>",
     )
     bench = spark.createDataFrame(
-        [
-            ("ev_a", [float(x) + 0.02 for x in vecs[3]]),   # ~cos 0.99 vs 3
-            ("ev_b", [float(x) + 0.02 for x in vecs[7]]),   # ~cos 0.99 vs 7
-            ("ev_far", [float(x) for x in rng.randn(16)]),  # matches nothing
-        ],
+        [(f"ev_{j}", [float(x) for x in v]) for j, v in enumerate(bvecs)],
         "bench_id string, embedding array<double>",
     )
 
-    # a zero vector (empty-doc embedding) must not abort the screen
-    # under ANSI mode: cos := 0 to everything (the kmeans convention)
-    corpus = corpus.unionByName(spark.createDataFrame(
-        [(999, [0.0] * 16)], "vec_id long, embedding array<double>"))
+    def cos(a, b):
+        na, nb = np.linalg.norm(a), np.linalg.norm(b)
+        return round(float(a @ b) / (na * nb), 4) if na * nb > 0 else 0.0
+
+    want = {}
+    for i, v in cvecs.items():
+        hits = [c for c in (cos(v, b) for b in bvecs) if c >= 0.95]
+        want[i] = (len(hits), max(hits) if hits else None, int(bool(hits)))
 
     out = decontaminate_embeddings(corpus, bench, min_cosine=0.95)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "Join" not in plan and "Exchange" not in plan, plan
 
     rows = {r["vec_id"]: r for r in out.collect()}
     assert len(rows) == 61
-    assert rows[999]["contaminated"] == 0
-    assert {i for i, r in rows.items() if r["contaminated"] == 1} == {3, 7}
-    assert rows[3]["n_bench_hits"] == 1 and rows[3]["max_cos"] >= 0.95
-    assert rows[5]["max_cos"] is None and rows[5]["n_bench_hits"] == 0
-
-    # GEMM scale path: flags AND stats match the broadcast oracle path
-    blas = {r["vec_id"]: r for r in decontaminate_embeddings(
-        corpus, bench, min_cosine=0.95, method="blas").collect()}
+    assert {i for i, w in want.items() if w[2]} == {3, 7}
     for i, r in rows.items():
-        assert blas[i]["contaminated"] == r["contaminated"], i
-        assert blas[i]["n_bench_hits"] == r["n_bench_hits"], i
-        if r["max_cos"] is None:
-            assert blas[i]["max_cos"] is None, i
+        n, mx, flag = want[i]
+        assert (r["n_bench_hits"], r["contaminated"]) == (n, flag), i
+        if mx is None:
+            assert r["max_cos"] is None, i
         else:
-            assert abs(blas[i]["max_cos"] - r["max_cos"]) < 1e-9, i
+            assert abs(r["max_cos"] - mx) < 1e-9, i
 
     # empty benchmark: identity flags, nothing contaminated
-    empty = decontaminate_embeddings(corpus, bench.limit(0), method="blas")
+    empty = decontaminate_embeddings(corpus, bench.limit(0))
     assert empty.filter(F.col("contaminated") == 1).count() == 0
 
-    with pytest.raises(ValueError, match="method"):
-        decontaminate_embeddings(corpus, bench, method="lsh")
-    with pytest.raises(ValueError, match="'ivf'"):
-        decontaminate_embeddings(corpus, bench, method="ivf")
+
+def test_embedding_screen_null_and_ragged_vectors(spark, tmp_path):
+    """A NULL corpus vector is clean (no hits, NULL max_cos) whether its
+    Arrow batch mixes it with real vectors or holds only NULLs, and a
+    NULL benchmark vector matches nothing; a vector of the wrong length
+    raises naming both lengths — through ``decontaminate_embeddings``
+    and the streaming sink's screen."""
+    from fuzzymatch_spark.operators.ann import decontaminate_embeddings
+    from fuzzymatch_spark.streaming.ingest import make_decontamination_sink
+
+    rng = np.random.RandomState(5)
+    vecs = [[float(x) for x in rng.randn(8)] for _ in range(3)]
+    bench = spark.createDataFrame(
+        [("ev", [x + 0.02 for x in vecs[1]]), ("ev_null", None)],
+        "bench_id string, embedding array<double>",
+    )
+    schema = "doc_id long, text string, embedding array<double>"
+    mixed = spark.createDataFrame(
+        [(0, "a", vecs[0]), (1, "b", vecs[1]), (2, "c", None),
+         (3, "d", vecs[2]), (4, "e", None)], schema,
+    ).coalesce(1)
+    all_null = mixed.filter(F.col("embedding").isNull())
+    ragged = spark.createDataFrame(
+        [(5, "f", vecs[0]), (6, "g", vecs[2][:5])], schema
+    ).coalesce(1)
+
+    def flags(df):
+        return {r["doc_id"]: (r["n_bench_hits"], r["max_cos"],
+                              r["contaminated"])
+                for r in decontaminate_embeddings(df, bench).collect()}
+
+    got = flags(mixed)
+    assert got[2] == got[4] == (0, None, 0)
+    assert got[1][0] == 1 and got[1][2] == 1
+    assert flags(all_null) == {2: (0, None, 0), 4: (0, None, 0)}
+    with pytest.raises(Exception, match="has 5 elements, the benchmark "
+                                        "vectors have 8"):
+        decontaminate_embeddings(ragged, bench).collect()
+
+    sink = make_decontamination_sink(
+        spark, str(tmp_path / "decon"), "doc_id", "text",
+        spark.createDataFrame([(900, "zzz qqq")], "doc_id long, text string"),
+        fuzzy=False, bench_embeddings_df=bench,
+    )
+    sink(mixed, 0)
+    sink(all_null, 1)
+    flagged = spark.read.parquet(str(tmp_path / "decon" / "flagged"))
+    clean = spark.read.parquet(str(tmp_path / "decon" / "clean"))
+    assert [r["doc_id"] for r in flagged.collect()] == [1]
+    assert sorted(
+        (r["doc_id"], r["batch"]) for r in clean.collect()
+    ) == [(0, 0), (2, 0), (2, 1), (3, 0), (4, 0), (4, 1)]
+    with pytest.raises(Exception, match="has 5 elements"):
+        sink(ragged, 2)
 
 
 def test_decontaminate_embeddings_sharded_matches_unsharded(spark):
