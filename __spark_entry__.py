@@ -3841,7 +3841,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # greedy per-language budget fill: rank by TTR desc (ties
         # md5(id), id), running token cumsum, keep the <=1000-token
-        # ranked prefix — mirrors operators/corpus.py:budget_fill
+        # ranked prefix — mirrors operators/corpus.py:budget_fill.  DuckDB
+        # sums BIGINT into HUGEINT; the cast matches Spark's long
         "token_budget_fill": """
             WITH scored AS (
               SELECT doc_id, lang,
@@ -3856,12 +3857,12 @@ def oracle_sql() -> dict[str, str]:
             ranked AS (
               SELECT doc_id, lang, n_tokens, score,
                      CAST(row_number() OVER w AS BIGINT) AS rank,
-                     sum(n_tokens) OVER (
+                     CAST(sum(n_tokens) OVER (
                        PARTITION BY lang
                        ORDER BY score DESC,
                                 md5(CAST(doc_id AS VARCHAR)), doc_id
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS cum_tokens
+                     ) AS BIGINT) AS cum_tokens
               FROM scored
               WINDOW w AS (PARTITION BY lang
                            ORDER BY score DESC,

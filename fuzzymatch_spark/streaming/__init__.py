@@ -1,3 +1,15 @@
-from fuzzymatch_spark.streaming.ingest import incremental_signatures
+from fuzzymatch_spark.streaming.ingest import (
+    make_decontamination_sink,
+    make_dedup_sink,
+    make_phash_dedup_sink,
+    make_signature_sink,
+    run_sink_stream,
+)
 
-__all__ = ["incremental_signatures"]
+__all__ = [
+    "make_decontamination_sink",
+    "make_dedup_sink",
+    "make_phash_dedup_sink",
+    "make_signature_sink",
+    "run_sink_stream",
+]

@@ -1,34 +1,45 @@
-"""Incremental signature ingest via Structured Streaming.
+"""Incremental ingest via Structured Streaming: one micro-batch skeleton.
 
 The reference has no incremental surface (SURVEY.md §1.3) and the north rule
 is a batch pipeline with checkpoint/resume — but a 10^12-row corpus is not
-re-signed from scratch when new shards land.  This module gives the
-signature stage an incremental front door:
+re-signed from scratch when new shards land.  Every incremental surface
+here is the same three pieces:
 
-    new parquet files in a landing directory
-      -> readStream (file source tracks processed files in the stream
-         checkpoint — exactly-once per file)
-      -> foreachBatch: the SAME fused signature pass used by the batch
-         pipeline, written to a batch-scoped partition
+    run_sink_stream   new parquet files in a landing directory
+                        -> readStream (the file source records processed
+                           files in the stream checkpoint: each file once)
+                        -> foreachBatch(sink)
+    make_*_sink       the per-batch work; history is read only through
+                      ``read_committed(..., below=batch_id)``
+    _commit_batch     the one commit protocol the table-writing sinks end
+                      with
 
-Downstream stages (candidate edges, verify, clustering) then run as batch
-jobs over the growing signatures table; LSH band keys are per-row, so new
-rows only generate candidate pairs against existing band buckets — the
-standard incremental-LSH pattern.
+The sinks: ``make_signature_sink`` (signature rows only),
+``make_dedup_sink`` (caption LSH dedup), ``make_phash_dedup_sink`` (image
+pHash dedup, optional benchmark screen) and ``make_decontamination_sink``
+(in-flight benchmark gate).  Each is a plain ``(batch_df, batch_id)``
+callable, so a replay is testable by calling it twice.  LSH band keys are
+per-row, so new rows generate candidate pairs only against the stored
+buckets of committed rows — the standard incremental-LSH pattern.
 
-Idempotency model: ``foreachBatch`` is AT-LEAST-once (a crash between the
-sink and the stream-checkpoint commit replays the batch under the SAME
-batch_id), so every write is scoped to its batch — ``<table>/batch=<id>``
-written with mode("overwrite") — and a per-batch commit marker under
+Idempotency model (``_commit_batch``): ``foreachBatch`` is AT-LEAST-once
+(a crash between the sink and the stream-checkpoint commit replays the
+batch under the SAME batch_id), so every write is scoped to its batch —
+``<table>/batch=<id>`` written with mode("overwrite"), then the dedup
+sinks' ``labels/`` delta — and a per-batch commit marker under
 ``_commits/<id>`` is created LAST through the Hadoop FS API (works on
-HDFS/S3, not just the local FS).  A replay overwrites its own partition
-with identical content and re-creates the marker; readers that must not
-observe an in-flight batch use ``read_committed``.
+HDFS/S3, not just the local FS).  A replay overwrites its own partitions
+with identical content and re-creates the marker; history reads, and
+readers that must not observe an in-flight batch, use ``read_committed``.
+The signature sink writes its one table without a marker.  What a sink
+persists for a batch is held by ``_batch_cache`` and released when the
+batch ends, also when a write or the fault hook raises.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -44,13 +55,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, hpath, jvm
 
 
-def _write_commit_marker(spark: SparkSession, commits_dir: str, batch_id: int) -> None:
-    fs, d, jvm = _hadoop_fs(spark, commits_dir)
-    fs.mkdirs(d)
-    p = jvm.org.apache.hadoop.fs.Path(d, str(batch_id))
-    fs.create(p, True).close()
-
-
 def committed_batches(spark: SparkSession, commits_dir: str) -> list[int]:
     """Batch ids with a commit marker, ascending (Hadoop FS — portable)."""
     fs, d, _ = _hadoop_fs(spark, commits_dir)
@@ -64,14 +68,26 @@ def committed_batches(spark: SparkSession, commits_dir: str) -> list[int]:
     return sorted(out)
 
 
-def read_committed(spark: SparkSession, work_dir: str, table: str) -> DataFrame | None:
-    """Read ONLY the committed batch partitions of a ``work_dir`` table
-    (``signatures`` / ``bands`` / ``edges``); None when nothing committed."""
+def _committed(
+    spark: SparkSession, work_dir: str, below: int | None = None
+) -> list[int]:
+    """Committed batch ids of ``work_dir``, only those < ``below`` if set."""
     commits = committed_batches(spark, os.path.join(work_dir, "_commits"))
-    paths = [os.path.join(work_dir, table, f"batch={b}") for b in commits]
-    if not paths:
-        return None
-    return spark.read.parquet(*paths)
+    return [b for b in commits if below is None or b < below]
+
+
+def read_committed(
+    spark: SparkSession, work_dir: str, table: str, below: int | None = None
+) -> DataFrame | None:
+    """Read ONLY the committed batch partitions of a ``work_dir`` table,
+    one explicit path per batch; None when no batch qualifies.  ``below``
+    keeps the batches < it: a sink's history, so a replay sees exactly
+    the pre-batch state."""
+    paths = [
+        os.path.join(work_dir, table, f"batch={b}")
+        for b in _committed(spark, work_dir, below)
+    ]
+    return spark.read.parquet(*paths) if paths else None
 
 
 def current_labels(
@@ -89,9 +105,7 @@ def current_labels(
     when delta volume warrants it.
     """
     labels_dir = os.path.join(work_dir, "labels")
-    commits = committed_batches(spark, os.path.join(work_dir, "_commits"))
-    if upto_batch is not None:
-        commits = [b for b in commits if b < upto_batch]
+    commits = _committed(spark, work_dir, upto_batch)
     comp = _latest_compacted(spark, labels_dir)
     if comp is not None and (upto_batch is None or comp[0] <= upto_batch):
         # the compacted view folds every delta BELOW its cover point; any
@@ -170,7 +184,7 @@ def compact_labels(spark: SparkSession, work_dir: str) -> int:
     call deletes.  Returns the number of delta partitions removed
     (0 = nothing to compact).
     """
-    commits = committed_batches(spark, os.path.join(work_dir, "_commits"))
+    commits = _committed(spark, work_dir)
     labels_dir = os.path.join(work_dir, "labels")
     if not commits:
         return 0
@@ -271,46 +285,110 @@ def label_merge_delta(
     return delta_new.unionByName(delta_old)
 
 
-def incremental_signatures(
+@contextmanager
+def _batch_cache():
+    """Persist scope of one micro-batch: each frame passed to the yielded
+    ``keep`` is persisted, and unpersisted when the batch ends — also when
+    a write or ``on_before_commit`` raises."""
+    held: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return held[-1]
+
+    try:
+        yield keep
+    finally:
+        for df in held:
+            df.unpersist()
+
+
+def _commit_batch(
+    spark: SparkSession,
+    work_dir: str,
+    batch_id: int,
+    tables: dict[str, DataFrame],
+    new_ids: DataFrame | None = None,
+    on_before_commit=None,
+) -> None:
+    """The commit protocol of every table-writing sink, in this order:
+
+      1. each ``tables`` entry overwrites ``<work_dir>/<name>/batch=<id>``
+         (dict order);
+      2. with ``new_ids`` (the batch's surviving ids): the ``labels/``
+         delta of the just-written ``edges`` partition against the label
+         view of the committed batches BELOW this one
+         (``label_merge_delta``), so a replay reproduces it;
+      3. ``on_before_commit(batch_id)`` — the fault-injection hook, run in
+         the exact window the design exists for (data written, batch
+         uncommitted);
+      4. the ``_commits/<id>`` marker, LAST.
+    """
+    def part(name: str) -> str:
+        return os.path.join(work_dir, name, f"batch={batch_id}")
+
+    for name, df in tables.items():
+        df.write.mode("overwrite").parquet(part(name))
+    if new_ids is not None:
+        label_merge_delta(
+            spark.read.parquet(part("edges")),
+            current_labels(spark, work_dir, upto_batch=batch_id),
+            new_ids,
+        ).write.mode("overwrite").parquet(part("labels"))
+    if on_before_commit is not None:
+        on_before_commit(batch_id)
+    fs, commits, jvm = _hadoop_fs(spark, os.path.join(work_dir, "_commits"))
+    fs.mkdirs(commits)
+    fs.create(jvm.org.apache.hadoop.fs.Path(commits, str(batch_id)), True).close()
+
+
+def run_sink_stream(
     spark: SparkSession,
     input_dir: str,
     schema: StructType | str,
-    output_dir: str,
     checkpoint_dir: str,
-    id_col: str,
-    text_col: str,
-    cfg: DedupConfig | None = None,
+    sink,
     available_now: bool = True,
 ):
-    """Start (and by default drain) a file-source stream that writes
-    signature rows for every new input file.
+    """Feed the new parquet files of ``input_dir`` to ``sink`` (one of the
+    ``make_*_sink`` callables) through ``foreachBatch``, at most 32 files
+    per micro-batch.
 
     ``available_now=True`` processes everything currently in ``input_dir``
     and stops — the batch-with-resume mode; ``False`` returns the running
-    query for continuous ingest.  Each micro-batch overwrites its own
-    ``batch=<id>`` partition, so an at-least-once replay cannot duplicate
-    rows; ``spark.read.parquet(output_dir)`` sees the whole table.
+    query for continuous ingest.  The stream checkpoint records processed
+    files, so a rerun over the same ``checkpoint_dir`` sees only new ones.
     """
-    cfg = cfg or DedupConfig()
-    stream = (
+    writer = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 32)
         .parquet(input_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sig = compute_signatures(batch_df, id_col, text_col, cfg)
-        sig.write.mode("overwrite").parquet(f"{output_dir}/batch={batch_id}")
-
-    writer = (
-        stream.writeStream.foreachBatch(sink)
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def make_signature_sink(
+    output_dir: str, id_col: str, text_col: str, cfg: DedupConfig | None = None
+):
+    """Signature ingest: each micro-batch's rows through the batch
+    pipeline's fused signature pass, overwriting ``<output_dir>/batch=<id>``
+    — an at-least-once replay cannot duplicate rows, and
+    ``spark.read.parquet(output_dir)`` sees the whole table.  No commit
+    marker: downstream stages run as batch jobs over the directory."""
+    cfg = cfg or DedupConfig()
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        compute_signatures(batch_df, id_col, text_col, cfg).write.mode(
+            "overwrite"
+        ).parquet(f"{output_dir}/batch={batch_id}")
+
+    return sink
 
 
 def make_dedup_sink(
@@ -320,39 +398,28 @@ def make_dedup_sink(
     text_col: str,
     cfg: DedupConfig | None = None,
     on_before_commit=None,
-    maintain_labels: bool = True,
 ):
-    """The incremental-dedup ``foreachBatch`` sink, exposed as a factory so
-    at-least-once replay (same batch_id, same rows) is directly testable.
-
-    Per micro-batch of NEW rows:
+    """Incremental caption near-dup detection.  Per micro-batch of NEW
+    rows:
 
       1. fused signature pass (same kernel as the batch pipeline)
       2. candidate edges touching >= 1 new row:
            new x new       — the batch band self-join on just the new rows
-           new x existing  — new rows' (band, key) equi-joined against the
-                             COMMITTED bands partitions (band keys of old
-                             rows are stored, never recomputed)
+           new x existing  — new rows' band keys equi-joined against the
+                             COMMITTED ``bands`` partitions (band keys of
+                             old rows are stored, never recomputed)
            exact           — hash-join on (xxhash64(norm), len) new vs all
       3. two-tier verify (same verify_edges)
-      4. with ``maintain_labels`` (default): incremental cluster-label
-         maintenance — the verified edges merge into the accumulated
-         ``labels/`` delta table via localized CC over the CONTRACTED
-         label graph (``label_merge_delta``), so cluster ids stay current
-         across batches without ever re-running CC over the full edge
-         union; ``current_labels`` is the latest-wins view.
-      5. write edges/signatures/bands/labels to ``<table>/batch=<id>``
-         partitions (mode overwrite — a replay rewrites identical
-         content), then create the ``_commits/<id>`` marker LAST.
+      4. ``_commit_batch`` of ``edges``/``signatures``/``bands``, with the
+         ``labels/`` delta: the verified edges merge into the accumulated
+         labels via localized CC over the CONTRACTED label graph, so
+         cluster ids stay current without re-running CC over the full
+         edge union; ``current_labels`` is the latest-wins view.
 
     History is strictly the committed batches BELOW the current id, so a
     replay after a post-marker crash sees exactly the pre-batch corpus and
-    reproduces the same partition content.
-
-    ``on_before_commit(batch_id)`` is a fault-injection hook invoked after
-    all table writes but BEFORE the commit marker — tests raise from it to
-    simulate a crash in the exact window the idempotency design exists for
-    (data written, batch uncommitted).
+    reproduces the same partition content.  ``on_before_commit`` is
+    ``_commit_batch``'s fault hook.
     """
     from pyspark.sql import functions as F
 
@@ -364,88 +431,64 @@ def make_dedup_sink(
     )
 
     cfg = cfg or DedupConfig()
-    sig_dir = os.path.join(work_dir, "signatures")
-    bands_dir = os.path.join(work_dir, "bands")
-    edges_dir = os.path.join(work_dir, "edges")
-    commits_dir = os.path.join(work_dir, "_commits")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        new_sig = compute_signatures(batch_df, id_col, text_col, cfg).persist()
-        new_bands = minhash_bands(new_sig, cfg).persist()
-
-        history = [
-            b for b in committed_batches(spark, commits_dir) if b < batch_id
-        ]
-        cand = minhash_band_edges(new_sig, cfg).select("a_id", "b_id", "source")
-        if history:
-            old_sig = spark.read.parquet(
-                *[f"{sig_dir}/batch={b}" for b in history]
-            )
-            old_bands = spark.read.parquet(
-                *[f"{bands_dir}/batch={b}" for b in history]
-            )
-            # the band index is folded into the 64-bit key
-            # (minhash_bands hashes xxhash64(band_i, slice)), so the
-            # incremental join equi-joins on the single key column — the
-            # band column is pruned from both scans and the exchange
-            cross = (
-                new_bands.select("id", "key").alias("n")
-                .join(old_bands.select("id", "key").alias("o"), on=["key"])
-                .filter(F.col("n.id") != F.col("o.id"))
-                .select(
-                    F.least("n.id", "o.id").alias("a_id"),
-                    F.greatest("n.id", "o.id").alias("b_id"),
+        with _batch_cache() as keep:
+            new_sig = keep(compute_signatures(batch_df, id_col, text_col, cfg))
+            new_bands = keep(minhash_bands(new_sig, cfg))
+            cand = minhash_band_edges(new_sig, cfg).select("a_id", "b_id", "source")
+            old_sig = read_committed(spark, work_dir, "signatures", below=batch_id)
+            if old_sig is not None:
+                old_bands = read_committed(spark, work_dir, "bands", below=batch_id)
+                # the band index is folded into the 64-bit key
+                # (minhash_bands hashes xxhash64(band_i, slice)), so the
+                # incremental join equi-joins on the single key column —
+                # the band column is pruned from both scans and the exchange
+                cross = (
+                    new_bands.select("id", "key").alias("n")
+                    .join(old_bands.select("id", "key").alias("o"), on=["key"])
+                    .filter(F.col("n.id") != F.col("o.id"))
+                    .select(
+                        F.least("n.id", "o.id").alias("a_id"),
+                        F.greatest("n.id", "o.id").alias("b_id"),
+                    )
+                    .dropDuplicates(["a_id", "b_id"])
+                    .withColumn("source", F.lit("minhash"))
                 )
-                .dropDuplicates(["a_id", "b_id"])
-                .withColumn("source", F.lit("minhash"))
-            )
-            keyed_new = new_sig.select(
-                "id", F.xxhash64("caption_norm").alias("nh"),
-                F.length("caption_norm").alias("nlen"),
-            )
-            keyed_old = old_sig.select(
-                "id", F.xxhash64("caption_norm").alias("nh"),
-                F.length("caption_norm").alias("nlen"),
-            )
-            exact_cross = (
-                keyed_new.alias("n")
-                .join(keyed_old.alias("o"), on=["nh", "nlen"])
-                .filter(F.col("n.id") != F.col("o.id"))
-                .select(
-                    F.least("n.id", "o.id").alias("a_id"),
-                    F.greatest("n.id", "o.id").alias("b_id"),
+                keyed_new = new_sig.select(
+                    "id", F.xxhash64("caption_norm").alias("nh"),
+                    F.length("caption_norm").alias("nlen"),
                 )
-                .withColumn("source", F.lit("exact"))
+                keyed_old = old_sig.select(
+                    "id", F.xxhash64("caption_norm").alias("nh"),
+                    F.length("caption_norm").alias("nlen"),
+                )
+                exact_cross = (
+                    keyed_new.alias("n")
+                    .join(keyed_old.alias("o"), on=["nh", "nlen"])
+                    .filter(F.col("n.id") != F.col("o.id"))
+                    .select(
+                        F.least("n.id", "o.id").alias("a_id"),
+                        F.greatest("n.id", "o.id").alias("b_id"),
+                    )
+                    .withColumn("source", F.lit("exact"))
+                )
+                cand = cand.unionByName(cross).unionByName(exact_cross)
+                all_sig = old_sig.unionByName(new_sig)
+            else:
+                all_sig = new_sig
+            cand = cand.unionByName(
+                exact_dup_edges(new_sig).select("a_id", "b_id", "source")
             )
-            cand = cand.unionByName(cross).unionByName(exact_cross)
-            all_sig = old_sig.unionByName(new_sig)
-        else:
-            all_sig = new_sig
-        cand = cand.unionByName(
-            exact_dup_edges(new_sig).select("a_id", "b_id", "source")
-        )
-        cand = cand.groupBy("a_id", "b_id").agg(F.min("source").alias("source"))
-
-        verified = verify_edges(cand, all_sig, cfg)
-        verified.write.mode("overwrite").parquet(f"{edges_dir}/batch={batch_id}")
-        new_sig.write.mode("overwrite").parquet(f"{sig_dir}/batch={batch_id}")
-        new_bands.write.mode("overwrite").parquet(
-            f"{bands_dir}/batch={batch_id}"
-        )
-        if maintain_labels:
-            delta = label_merge_delta(
-                spark.read.parquet(f"{edges_dir}/batch={batch_id}"),
-                current_labels(spark, work_dir, upto_batch=batch_id),
-                new_sig.select("id"),
-            )
-            delta.write.mode("overwrite").parquet(
-                f"{work_dir}/labels/batch={batch_id}"
-            )
-        if on_before_commit is not None:
-            on_before_commit(batch_id)
-        _write_commit_marker(spark, commits_dir, batch_id)
-        new_sig.unpersist()
-        new_bands.unpersist()
+            cand = cand.groupBy("a_id", "b_id").agg(F.min("source").alias("source"))
+            tables = {
+                "edges": verify_edges(cand, all_sig, cfg),
+                "signatures": new_sig,
+                "bands": new_bands,
+            }
+            _commit_batch(spark, work_dir, batch_id, tables,
+                          new_ids=new_sig.select("id"),
+                          on_before_commit=on_before_commit)
 
     return sink
 
@@ -458,16 +501,12 @@ def make_phash_dedup_sink(
     n_bands: int = 8,
     max_hamming: int = 6,
     on_before_commit=None,
-    maintain_labels: bool = True,
     bench_df: DataFrame | None = None,
     decon_max_hamming: int = 6,
 ):
     """Image-side incremental near-dup sink — the pHash half of the north
-    rule's image+caption table, mirroring ``make_dedup_sink``'s idempotency
-    model (batch-scoped overwrites, commit marker written LAST,
-    ``on_before_commit`` fault hook).
-
-    Per micro-batch of NEW rows carrying stored perceptual hashes:
+    rule's image+caption table.  Per micro-batch of NEW rows carrying
+    stored perceptual hashes:
 
       1. new x new — the Manku combination-key Hamming self-join
          (``_hamming_band_edges``, with its mega-bucket cap)
@@ -478,7 +517,8 @@ def make_phash_dedup_sink(
          per row; no band table persisted, no shuffle on the history
          side beyond the join itself)
       3. JVM ``bit_count`` verify on both legs
-      4. write edges + phashes to ``<table>/batch=<id>``, then the marker
+      4. ``_commit_batch`` of ``edges``/``phashes`` with the ``labels/``
+         delta, as ``make_dedup_sink``
 
     ``max_hamming`` and, with ``bench_df``, ``decon_max_hamming`` must
     satisfy ``0 <= radius < n_bands``; a bad radius raises ``ValueError``
@@ -498,8 +538,7 @@ def make_phash_dedup_sink(
     ``decon/batch=<id>`` (lineage: hit counts + min Hamming) and never
     reach the edges, phash history, or label tables — an eval near-dup
     arriving on the stream is quarantined at ingest, not discovered at
-    training time.  Batch-scoped overwrites keep the screen replay-
-    idempotent like every other table here.
+    training time.
     """
     from pyspark.sql import functions as F
 
@@ -509,9 +548,6 @@ def make_phash_dedup_sink(
         hamming_probe_pairs,
     )
 
-    ph_dir = os.path.join(work_dir, "phashes")
-    edges_dir = os.path.join(work_dir, "edges")
-    commits_dir = os.path.join(work_dir, "_commits")
     check_hamming_radius(n_bands, max_hamming)
     if bench_df is not None:
         check_hamming_radius(n_bands, decon_max_hamming, "decon_max_hamming")
@@ -520,149 +556,53 @@ def make_phash_dedup_sink(
         new = batch_df.select(
             F.col(id_col).alias("id"), F.col(phash_col).alias("ph")
         )
-        if bench_df is not None:
-            from fuzzymatch_spark.operators.multimodal import (
-                decontaminate_images,
-            )
-
-            screened = decontaminate_images(
-                new,
-                bench_df.select(
-                    "bench_id", F.col(phash_col).alias("ph")
-                ),
-                corpus_id="id",
-                phash_col="ph",
-                max_hamming=decon_max_hamming,
-                n_bands=n_bands,
-            ).persist()
-            screened.filter(F.col("contaminated") == 1).select(
-                F.col("id").alias(id_col), "n_bench_hits", "min_hamming"
-            ).write.mode("overwrite").parquet(
-                f"{work_dir}/decon/batch={batch_id}"
-            )
-            new = screened.filter(F.col("contaminated") == 0).select(
-                "id", "ph"
-            )
-        new = new.persist()
-        cand = _hamming_band_edges(
-            new, "id", "ph", n_bands, max_hamming, "phash"
-        ).select("a_id", "b_id", "source")
-
-        history = [
-            b for b in committed_batches(spark, commits_dir) if b < batch_id
-        ]
-        if history:
-            old = spark.read.parquet(
-                *[f"{ph_dir}/batch={b}" for b in history]
-            ).select(F.col(id_col).alias("id"), F.col(phash_col).alias("ph"))
-            cross = (
-                hamming_probe_pairs(new, old, "ph", n_bands, max_hamming)
-                .filter("l_id != r_id")
-                .selectExpr(
-                    "least(l_id, r_id) AS a_id",
-                    "greatest(l_id, r_id) AS b_id",
-                    "'phash' AS source",
+        tables = {}
+        with _batch_cache() as keep:
+            if bench_df is not None:
+                from fuzzymatch_spark.operators.multimodal import (
+                    decontaminate_images,
                 )
-            )
-            cand = cand.unionByName(cross).dropDuplicates(["a_id", "b_id"])
 
-        cand.write.mode("overwrite").parquet(f"{edges_dir}/batch={batch_id}")
-        new.select(
-            F.col("id").alias(id_col), F.col("ph").alias(phash_col)
-        ).write.mode("overwrite").parquet(f"{ph_dir}/batch={batch_id}")
-        if maintain_labels:
-            delta = label_merge_delta(
-                spark.read.parquet(f"{edges_dir}/batch={batch_id}"),
-                current_labels(spark, work_dir, upto_batch=batch_id),
-                new.select("id"),
+                screened = keep(decontaminate_images(
+                    new,
+                    bench_df.select("bench_id", F.col(phash_col).alias("ph")),
+                    corpus_id="id",
+                    phash_col="ph",
+                    max_hamming=decon_max_hamming,
+                    n_bands=n_bands,
+                ))
+                tables["decon"] = screened.filter(
+                    F.col("contaminated") == 1
+                ).select(F.col("id").alias(id_col), "n_bench_hits", "min_hamming")
+                new = screened.filter(F.col("contaminated") == 0).select("id", "ph")
+            new = keep(new)
+            cand = _hamming_band_edges(
+                new, "id", "ph", n_bands, max_hamming, "phash"
+            ).select("a_id", "b_id", "source")
+            old = read_committed(spark, work_dir, "phashes", below=batch_id)
+            if old is not None:
+                old = old.select(
+                    F.col(id_col).alias("id"), F.col(phash_col).alias("ph")
+                )
+                cross = (
+                    hamming_probe_pairs(new, old, "ph", n_bands, max_hamming)
+                    .filter("l_id != r_id")
+                    .selectExpr(
+                        "least(l_id, r_id) AS a_id",
+                        "greatest(l_id, r_id) AS b_id",
+                        "'phash' AS source",
+                    )
+                )
+                cand = cand.unionByName(cross).dropDuplicates(["a_id", "b_id"])
+            tables["edges"] = cand
+            tables["phashes"] = new.select(
+                F.col("id").alias(id_col), F.col("ph").alias(phash_col)
             )
-            delta.write.mode("overwrite").parquet(
-                f"{work_dir}/labels/batch={batch_id}"
-            )
-        if on_before_commit is not None:
-            on_before_commit(batch_id)
-        _write_commit_marker(spark, commits_dir, batch_id)
-        new.unpersist()
-        if bench_df is not None:
-            screened.unpersist()
+            _commit_batch(spark, work_dir, batch_id, tables,
+                          new_ids=new.select("id"),
+                          on_before_commit=on_before_commit)
 
     return sink
-
-
-def incremental_phash_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    schema: StructType | str,
-    work_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "image_id",
-    phash_col: str = "phash",
-    available_now: bool = True,
-    bench_df: DataFrame | None = None,
-    decon_max_hamming: int = 6,
-):
-    """File-source stream over landing (image_id, phash) shards →
-    ``make_phash_dedup_sink``.  Tables under ``work_dir``: ``phashes/``,
-    ``edges/`` (batch-partitioned) + ``_commits/`` markers, plus
-    ``decon/`` when ``bench_df`` enables the in-flight benchmark
-    screen."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 32)
-        .parquet(input_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_phash_dedup_sink(
-                spark, work_dir, id_col, phash_col,
-                bench_df=bench_df, decon_max_hamming=decon_max_hamming,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
-
-
-def incremental_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    schema: StructType | str,
-    work_dir: str,
-    checkpoint_dir: str,
-    id_col: str,
-    text_col: str,
-    cfg: DedupConfig | None = None,
-    available_now: bool = True,
-):
-    """Incremental near-duplicate detection: the standard incremental-LSH
-    pattern over a file-source stream (see ``make_dedup_sink`` for the
-    per-batch plan and the idempotency model).  Clustering stays a batch
-    job over the accumulated edges table (connected components is global by
-    nature; the north-rule pipeline runs it from the edges checkpoint).
-
-    Tables under ``work_dir``: ``signatures/``, ``bands/``, ``edges/``
-    (batch-partitioned), plus ``_commits/`` markers.
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 32)
-        .parquet(input_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_dedup_sink(spark, work_dir, id_col, text_col, cfg)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()
 
 
 def make_decontamination_sink(
@@ -689,10 +629,8 @@ def make_decontamination_sink(
     with ``fuzzy`` (default), the MinHash-LSH near-dup tier
     (``decontaminate_fuzzy``) — both broadcast-only against the batch, so
     a micro-batch never shuffles.  Rows split into ``clean/batch=<id>``
-    (both flags 0) and ``flagged/batch=<id>`` (full flag columns kept for
-    audit), then the ``_commits/<id>`` marker LAST — the same
-    at-least-once idempotency model as the dedup sinks (a replay rewrites
-    identical batch-scoped partitions).
+    (every flag 0, flag columns dropped) and ``flagged/batch=<id>`` (full
+    flag columns kept for audit), committed by ``_commit_batch``.
 
     The benchmark is persisted once here (it is re-derived into grams /
     signatures per batch — caching the source rows keeps that a
@@ -717,7 +655,6 @@ def make_decontamination_sink(
     )
 
     cfg = cfg or DedupConfig()
-    commits_dir = os.path.join(work_dir, "_commits")
     bench = benchmark_df.persist()
     # the benchmark is static across micro-batches: compute its
     # signatures ONCE here and hand them to every batch — the per-batch
@@ -764,69 +701,19 @@ def make_decontamination_sink(
             )
             flags = flags.join(emb, "doc_id")
             dirty = dirty | (F.col("emb_contaminated") == 1)
-        joined = batch_df.join(
-            flags.withColumnRenamed("doc_id", id_col), id_col
-        ).persist()
-        joined.filter(~dirty).drop(
-            *[c for c in ("n_gram_hits", "contaminated",
-                          "fuzzy_hits", "fuzzy_contaminated",
-                          "emb_hits", "emb_max_cos", "emb_contaminated")
-              if c in joined.columns]
-        ).write.mode("overwrite").parquet(
-            f"{work_dir}/clean/batch={batch_id}"
-        )
-        joined.filter(dirty).write.mode("overwrite").parquet(
-            f"{work_dir}/flagged/batch={batch_id}"
-        )
-        joined.unpersist()
-        if on_before_commit is not None:
-            on_before_commit(batch_id)
-        _write_commit_marker(spark, commits_dir, batch_id)
+        with _batch_cache() as keep:
+            joined = keep(batch_df.join(
+                flags.withColumnRenamed("doc_id", id_col), id_col
+            ))
+            flag_cols = [
+                c for c in ("n_gram_hits", "contaminated",
+                            "fuzzy_hits", "fuzzy_contaminated",
+                            "emb_hits", "emb_max_cos", "emb_contaminated")
+                if c in joined.columns
+            ]
+            _commit_batch(spark, work_dir, batch_id, {
+                "clean": joined.filter(~dirty).drop(*flag_cols),
+                "flagged": joined.filter(dirty),
+            }, on_before_commit=on_before_commit)
 
     return sink
-
-
-def incremental_decontamination(
-    spark: SparkSession,
-    input_dir: str,
-    schema: StructType | str,
-    work_dir: str,
-    checkpoint_dir: str,
-    id_col: str,
-    text_col: str,
-    benchmark_df: DataFrame,
-    ngram_n: int = 3,
-    fuzzy: bool = True,
-    cfg: DedupConfig | None = None,
-    jaccard_pct: int = 98,
-    available_now: bool = True,
-    bench_embeddings_df: DataFrame | None = None,
-    emb_vec_col: str = "embedding",
-    emb_min_cosine: float = 0.95,
-):
-    """File-source stream over landing doc shards →
-    ``make_decontamination_sink``.  Tables under ``work_dir``:
-    ``clean/``, ``flagged/`` (batch-partitioned) + ``_commits/``."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 32)
-        .parquet(input_dir)
-    )
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_decontamination_sink(
-                spark, work_dir, id_col, text_col, benchmark_df,
-                ngram_n=ngram_n, fuzzy=fuzzy, cfg=cfg,
-                jaccard_pct=jaccard_pct,
-                bench_embeddings_df=bench_embeddings_df,
-                emb_vec_col=emb_vec_col,
-                emb_min_cosine=emb_min_cosine,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()

@@ -71,6 +71,19 @@ def test_oracle_parity(spark, duck, name):
     assert sv == dv, f"{name}: first mismatches {mism}"
 
 
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_oracle_result_types(duck, name):
+    """Every oracle column has a type Spark can return: no HUGEINT (DuckDB's
+    ``sum`` over BIGINT) and no DECIMAL.  ``_canon`` stringifies values, so
+    the value comparison above cannot see such a type drift."""
+    res = duck.sql(ORACLES[name])
+    wide = [
+        (col, str(typ)) for col, typ in zip(res.columns, res.types)
+        if str(typ).startswith(("HUGEINT", "DECIMAL"))
+    ]
+    assert not wide, f"{name}: cast to BIGINT or DOUBLE: {wide}"
+
+
 @pytest.mark.parametrize("name", sorted(set(ALL_QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(spark, name):
     sdf = ALL_QUERIES[name](spark, SF_DIR)

@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from fuzzymatch_spark.streaming.ingest import incremental_signatures
+from fuzzymatch_spark.streaming.ingest import make_signature_sink, run_sink_stream
 
 SCHEMA = "doc_id bigint, text string"
 
@@ -21,9 +21,10 @@ def test_incremental_exactly_once(spark, tmp_path):
     inp = str(tmp_path / "landing")
     out = str(tmp_path / "signatures")
     ckpt = str(tmp_path / "ckpt")
+    sink = make_signature_sink(out, "doc_id", "text")
 
     _write_batch(spark, inp, [(1, "spark shuffle join"), (2, "window batch scan")])
-    incremental_signatures(spark, inp, SCHEMA, out, ckpt, "doc_id", "text")
+    run_sink_stream(spark, inp, SCHEMA, ckpt, sink)
     first = spark.read.parquet(out)
     assert first.count() == 2
     assert {r["id"] for r in first.collect()} == {1, 2}
@@ -32,13 +33,13 @@ def test_incremental_exactly_once(spark, tmp_path):
 
     # second landing batch: only the 2 new rows are processed
     _write_batch(spark, inp, [(3, "stream table merge"), (4, "hash key sort")])
-    incremental_signatures(spark, inp, SCHEMA, out, ckpt, "doc_id", "text")
+    run_sink_stream(spark, inp, SCHEMA, ckpt, sink)
     second = spark.read.parquet(out)
     assert second.count() == 4  # no re-processing of files 1-2
     assert {r["id"] for r in second.collect()} == {1, 2, 3, 4}
 
     # re-run with nothing new: no-op
-    incremental_signatures(spark, inp, SCHEMA, out, ckpt, "doc_id", "text")
+    run_sink_stream(spark, inp, SCHEMA, ckpt, sink)
     assert spark.read.parquet(out).count() == 4
 
 
@@ -55,12 +56,13 @@ def test_incremental_dedup_cross_batch(spark, tmp_path):
         minhash_band_edges,
         verify_edges,
     )
-    from fuzzymatch_spark.streaming.ingest import incremental_dedup
+    from fuzzymatch_spark.streaming.ingest import make_dedup_sink
 
     cfg = DedupConfig(min_score=0.72)
     inp = str(tmp_path / "landing")
     work = str(tmp_path / "dedup")
     ckpt = str(tmp_path / "ckpt2")
+    sink = make_dedup_sink(spark, work, "doc_id", "text", cfg)
 
     batch1 = [(1, "spark shuffle partition join window"),
               (2, "hash key order fast small"),
@@ -71,9 +73,9 @@ def test_incremental_dedup_cross_batch(spark, tmp_path):
               (6, "hash key order fast small")]
 
     _write_batch(spark, inp, batch1)
-    incremental_dedup(spark, inp, SCHEMA, work, ckpt, "doc_id", "text", cfg=cfg)
+    run_sink_stream(spark, inp, SCHEMA, ckpt, sink)
     _write_batch(spark, inp, batch2)
-    incremental_dedup(spark, inp, SCHEMA, work, ckpt, "doc_id", "text", cfg=cfg)
+    run_sink_stream(spark, inp, SCHEMA, ckpt, sink)
 
     edges = spark.read.parquet(f"{work}/edges")
     got = {(r["a_id"], r["b_id"]) for r in edges.collect()}
@@ -93,7 +95,7 @@ def test_incremental_dedup_cross_batch(spark, tmp_path):
     assert got == want, (got, want)
 
     # exactly-once: nothing new -> edge table unchanged
-    incremental_dedup(spark, inp, SCHEMA, work, ckpt, "doc_id", "text", cfg=cfg)
+    run_sink_stream(spark, inp, SCHEMA, ckpt, sink)
     assert spark.read.parquet(f"{work}/edges").count() == edges.count()
 
 
@@ -166,10 +168,24 @@ def test_dedup_sink_crash_before_commit(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(3, "spark shuffle partition join windoww"),
          (4, "hash key order fast small")], SCHEMA)
-    sink(b0, 0)
 
+    def persisted():
+        # ids, not a count: the context cleaner may drop RDDs that earlier
+        # tests left persisted while this one runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    # an earlier test's cache of the same plan would hide this batch's own
+    spark.catalog.clearCache()
+    before = persisted()
+    sink(b0, 0)
+    committed_rise = len(persisted() - before)
+
+    before = persisted()
     with pytest.raises(Boom):
         sink(b1, 1)  # crashes after edges/signatures/bands writes
+    # the sink releases its own persists on the raise too: a crashed batch
+    # leaves no more cached RDDs behind than a committed one
+    assert len(persisted() - before) <= committed_rise
 
     # batch 1 is written but NOT committed: invisible to committed readers
     assert committed_batches(spark, f"{work}/_commits") == [0]
@@ -198,7 +214,6 @@ def test_incremental_phash_dedup_cross_batch(spark, tmp_path):
     from fuzzymatch_spark.operators.dedup import _hamming_band_edges
     from fuzzymatch_spark.streaming.ingest import (
         committed_batches,
-        incremental_phash_dedup,
         make_phash_dedup_sink,
     )
 
@@ -213,12 +228,13 @@ def test_incremental_phash_dedup_cross_batch(spark, tmp_path):
     inp = str(tmp_path / "landing")
     work = str(tmp_path / "phwork")
     ckpt = str(tmp_path / "phckpt")
+    sink = make_phash_dedup_sink(spark, work)
     spark.createDataFrame(b1, pschema).coalesce(1).write.mode("append").parquet(inp)
-    incremental_phash_dedup(spark, inp, pschema, work, ckpt)
+    run_sink_stream(spark, inp, pschema, ckpt, sink)
     spark.createDataFrame(b2, pschema).coalesce(1).write.mode("append").parquet(inp)
-    incremental_phash_dedup(spark, inp, pschema, work, ckpt)
+    run_sink_stream(spark, inp, pschema, ckpt, sink)
     spark.createDataFrame(b3, pschema).coalesce(1).write.mode("append").parquet(inp)
-    incremental_phash_dedup(spark, inp, pschema, work, ckpt)
+    run_sink_stream(spark, inp, pschema, ckpt, sink)
 
     assert committed_batches(spark, f"{work}/_commits") == [0, 1, 2]
     edges = spark.read.parquet(f"{work}/edges")
@@ -236,7 +252,6 @@ def test_incremental_phash_dedup_cross_batch(spark, tmp_path):
     assert got == want
 
     # replay idempotency: re-invoke the sink under the last batch id
-    sink = make_phash_dedup_sink(spark, work)
     sink(spark.createDataFrame(b3, pschema), 2)
     again = {(r["a_id"], r["b_id"])
              for r in spark.read.parquet(f"{work}/edges").collect()}
@@ -401,7 +416,7 @@ def test_incremental_decontamination_gate(spark, tmp_path):
     """In-flight decontamination: exact-tier and fuzzy-tier leaks are
     routed to flagged/, clean docs to clean/, across micro-batches; a
     second AvailableNow pass processes only new files."""
-    from fuzzymatch_spark.streaming.ingest import incremental_decontamination
+    from fuzzymatch_spark.streaming.ingest import make_decontamination_sink
 
     inp = str(tmp_path / "landing")
     work = str(tmp_path / "decon")
@@ -409,15 +424,14 @@ def test_incremental_decontamination_gate(spark, tmp_path):
 
     bench_text = "the quick brown fox jumps over the lazy dog tonight"
     bench = spark.createDataFrame([(900, bench_text)], SCHEMA)
+    sink = make_decontamination_sink(spark, work, "doc_id", "text", bench)
 
     # batch 1: one exact-gram leak, one clean doc
     _write_batch(spark, inp, [
         (1, "prefix " + bench_text + " suffix"),     # shares 3-grams
         (2, "completely unrelated corpus document"),
     ])
-    incremental_decontamination(
-        spark, inp, SCHEMA, work, ckpt, "doc_id", "text", bench
-    )
+    run_sink_stream(spark, inp, SCHEMA, ckpt, sink)
     clean = spark.read.parquet(f"{work}/clean")
     flagged = spark.read.parquet(f"{work}/flagged")
     assert {r["doc_id"] for r in clean.collect()} == {2}
@@ -427,9 +441,7 @@ def test_incremental_decontamination_gate(spark, tmp_path):
     # exact token-gram tier, caught by the fuzzy shingle tier
     rev = " ".join(reversed(bench_text.split(" ")))
     _write_batch(spark, inp, [(3, rev), (4, "another clean one entirely")])
-    incremental_decontamination(
-        spark, inp, SCHEMA, work, ckpt, "doc_id", "text", bench
-    )
+    run_sink_stream(spark, inp, SCHEMA, ckpt, sink)
     clean2 = {r["doc_id"] for r in
               spark.read.parquet(f"{work}/clean").collect()}
     flagged2 = {r["doc_id"]: r for r in
